@@ -144,25 +144,29 @@ object Bench {
     * device was actually probed.
     */
   private[graft] lazy val calibIoBase: String =
-    sys.env.get("SPARK_GRAFT_BENCH_IO_SCRATCH").getOrElse {
-      Option(java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent)
-        .flatMap { base =>
-          try {
-            val probe = java.nio.file.Files
-              .createTempDirectory(base, "graft_calib_io_probe")
-            java.nio.file.Files.delete(probe)
-            Some(base.toString)
-          } catch { case _: Exception => None }
-        }
-        .getOrElse(System.getProperty("java.io.tmpdir"))
-    }
+    sys.env.get("SPARK_GRAFT_BENCH_IO_SCRATCH").getOrElse(writableSibling(sfDir))
+
+  /** The parent of `dir` if a directory can be created there, else
+    * java.io.tmpdir: scratch on the same device as the data.
+    */
+  private[graft] def writableSibling(dir: String): String =
+    Option(java.nio.file.Paths.get(dir).toAbsolutePath.getParent)
+      .flatMap { base =>
+        try {
+          val probe = java.nio.file.Files
+            .createTempDirectory(base, "graft_calib_io_probe")
+          java.nio.file.Files.delete(probe)
+          Some(base.toString)
+        } catch { case _: Exception => None }
+      }
+      .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** Recursive delete via java.nio, NOT the Hadoop FS client: Hadoop's
     * own shutdown hook may close all filesystems before ours runs (hook
     * ordering is nondeterministic), which made the old FS-client delete
     * throw and leak ~45 MB per calibration_io JVM (r13 ADVICE, low).
     */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
+  private[graft] def deleteRecursively(dir: java.nio.file.Path): Unit =
     try {
       val walk = java.nio.file.Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder())

@@ -44,7 +44,4 @@ object Metastore {
 
   def listTables(spark: SparkSession): Seq[String] =
     spark.catalog.listTables().collect().map(_.name).toSeq
-
-  def dropTable(spark: SparkSession, table: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS $table")
 }

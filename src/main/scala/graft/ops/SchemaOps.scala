@@ -182,28 +182,11 @@ object SchemaOps {
     }: _*)
   }
 
-  /** Monitoring window definitions (core/monitoring_window_config_engine.py
-    * :86-230): rolling = [now - size - offset, now - offset); expanding =
-    * [origin, now - offset). Millis in, (start, end) millis out.
+  /** Rolling monitoring window (core/monitoring_window_config_engine.py
+    * :86-230): [now - size - offset, now - offset). Millis in, (start,
+    * end) millis out.
     */
   def rollingWindow(nowMillis: Long, sizeMillis: Long,
                     offsetMillis: Long = 0L): (Long, Long) =
     (nowMillis - offsetMillis - sizeMillis, nowMillis - offsetMillis)
-
-  def expandingWindow(originMillis: Long, nowMillis: Long,
-                      offsetMillis: Long = 0L): (Long, Long) =
-    (originMillis, nowMillis - offsetMillis)
-
-  /** Monitoring-window slice: event-time range + row-fraction sample
-    * (core/monitoring_window_config_engine.py:190-373), profiled with one
-    * agg pass — feeds [[Statistics.differenceAndShift]].
-    */
-  def monitoringWindow(df: DataFrame, eventTimeCol: String,
-                       startMillis: Long, endMillis: Long,
-                       rowPercentage: Double = 1.0,
-                       seed: Long = 42L): DataFrame = {
-    val et = Splits.eventTimeMillisCol(df, eventTimeCol)
-    val window = df.filter(et >= startMillis && et < endMillis)
-    Splits.sampleFraction(window, rowPercentage, seed)
-  }
 }

@@ -79,14 +79,6 @@ object TextAnalysis {
       length(regexp_replace(text, "[^\\p{Punct}]", "")).cast("double")
         / length(text))
 
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      length(regexp_replace(text, "[^A-Z]", "")).cast("double") / length(text))
-
-  def digitRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      length(regexp_replace(text, "[^0-9]", "")).cast("double") / length(text))
-
   /** Unicode-script composition ratios — the multilingual-corpus
     * companion to the char-class quality ratios above: per document,
     * the fraction of code points that are Latin letters, Han, decimal

@@ -1,7 +1,6 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -62,6 +61,15 @@ import org.apache.spark.sql.types._
   * list to `spark.read.parquet`); the log replay is driver-side and
   * O(tail) thanks to checkpoints. The checkpoint itself is a tiny
   * |live files|+2-row frame written through Spark's parquet writer.
+  *
+  * Every filesystem is resolved from the session's Hadoop
+  * configuration, so a table lives wherever Spark's own reader and
+  * writer can reach (custom schemes, credentials, `fs.*` settings).
+  *
+  * [[Lake]] commits through the same log: [[transact]] is the
+  * put-if-absent + rebase loop, with `add.tags` and
+  * `metaData.configuration` carrying the merge-on-read table's commit
+  * times and retention horizon through checkpoints.
   */
 object DeltaLite {
 
@@ -70,11 +78,8 @@ object DeltaLite {
 
   private val mapper = new ObjectMapper()
 
-  private def fs(path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path).normalize() match {
-      case u if u.getScheme == null => new java.io.File(path).toURI
-      case u => u
-    }, new Configuration())
+  private def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def logDir(table: String) = new Path(table, "_delta_log")
 
@@ -88,8 +93,8 @@ object DeltaLite {
     new Path(logDir(table), "_last_checkpoint")
 
   /** Sorted existing commit versions (JSON commit files only). */
-  def versions(table: String): Seq[Long] = {
-    val f = fs(table)
+  def versions(spark: SparkSession, table: String): Seq[Long] = {
+    val f = fs(spark, table)
     val ld = logDir(table)
     if (!f.exists(ld)) Seq.empty
     else f.listStatus(ld).toSeq.map(_.getPath.getName)
@@ -101,8 +106,9 @@ object DeltaLite {
     * the fallback when `_last_checkpoint` is absent or ahead of the
     * requested time-travel version).
     */
-  private[graft] def checkpointVersions(table: String): Seq[Long] = {
-    val f = fs(table)
+  private[graft] def checkpointVersions(spark: SparkSession,
+                                        table: String): Seq[Long] = {
+    val f = fs(spark, table)
     val ld = logDir(table)
     if (!f.exists(ld)) Seq.empty
     else f.listStatus(ld).toSeq.map(_.getPath.getName)
@@ -111,8 +117,9 @@ object DeltaLite {
   }
 
   /** The `_last_checkpoint` pointer, if present and readable. */
-  private[graft] def lastCheckpoint(table: String): Option[Long] = {
-    val f = fs(table)
+  private[graft] def lastCheckpoint(spark: SparkSession,
+                                    table: String): Option[Long] = {
+    val f = fs(spark, table)
     val p = lastCheckpointFile(table)
     if (!f.exists(p)) None
     else {
@@ -124,22 +131,15 @@ object DeltaLite {
     }
   }
 
-  private def writeCommit(table: String, v: Long,
-                          actions: Seq[String]): Unit = {
-    val out = fs(table).create(commitFile(table, v), false)
-    actions.foreach { a => out.write((a + "\n").getBytes("UTF-8")) }
-    out.close()
-  }
-
   /** Atomic put-if-absent publish of commit `v`. Returns false when the
     * version already exists — the caller lost the race and must rebase.
     * Local scheme: stage to a hidden `.tmp` in `_delta_log`, then
     * `Files.createLink` (atomic, EEXIST on conflict) and drop the
     * stage. Other schemes: exclusive create (atomic on HDFS).
     */
-  private[graft] def tryPublish(table: String, v: Long,
+  private[graft] def tryPublish(spark: SparkSession, table: String, v: Long,
                                 actions: Seq[String]): Boolean = {
-    val f = fs(table)
+    val f = fs(spark, table)
     val target = commitFile(table, v)
     if (f.getScheme == "file") {
       val tmp = new Path(logDir(table),
@@ -171,56 +171,82 @@ object DeltaLite {
   }
 
   /** The optimistic-concurrency loop: try successive versions until the
-    * put-if-absent publish wins. `actions(v)` is re-evaluated on every
+    * put-if-absent publish wins. `attempt(v)` is re-evaluated on every
     * attempt so a loser REBASES against the freshly observed head
-    * (v − 1) rather than replaying a stale view. Bounded — an FS whose
-    * put-if-absent always "loses" must surface as an error, not an
-    * infinite loop.
+    * (v − 1) rather than replaying a stale view; it returns None to
+    * abandon the transaction (nothing left to do at the new head). The
+    * first version tried is one past the newest in the log, 0 for a
+    * table without one. An attempt that fails while another writer
+    * has already published v lost the race too (it may have read files
+    * that commit removed and deleted), so it rebases instead of
+    * failing. Bounded — an FS whose put-if-absent always "loses" must
+    * surface as an error, not an infinite loop. Returns the published
+    * version.
     */
-  private def commitWithRetry(table: String, maxAttempts: Int = 1000)
-                             (actions: Long => Seq[String]): Long = {
-    var v = versions(table).lastOption.getOrElse(
-      sys.error(s"$table has no log — create first")) + 1
+  private[graft] def transact(spark: SparkSession, table: String)
+                             (attempt: Long => Option[Seq[String]]): Option[Long] = {
+    val maxAttempts = 1000
+    def head = versions(spark, table).lastOption.getOrElse(-1L)
+    var v = head + 1
     var attempts = 0
     while (attempts < maxAttempts) {
       attempts += 1
-      if (tryPublish(table, v, actions(v))) {
-        maybeCheckpoint(table, v)
-        return v
+      val won =
+        try attempt(v).map(tryPublish(spark, table, v, _))
+        catch { case scala.util.control.NonFatal(_) if head >= v => Some(false) }
+      won match {
+        case None => return None
+        case Some(true) =>
+          maybeCheckpoint(spark, table, v)
+          return Some(v)
+        case Some(false) =>
+          // lost the race: rebase to at least one past the newest head
+          v = math.max(v + 1, head + 1)
       }
-      // lost the race: rebase to at least one past the newest head
-      v = math.max(v + 1, versions(table).lastOption.getOrElse(-1L) + 1)
     }
     sys.error(s"$table: lost the commit race $maxAttempts times")
   }
 
-  private def protocolAction: String =
+  private def commitWithRetry(spark: SparkSession, table: String)
+                             (actions: Long => Seq[String]): Long = {
+    require(versions(spark, table).nonEmpty,
+      s"$table has no log — create first")
+    transact(spark, table)(v => Some(actions(v))).get
+  }
+
+  private[graft] def protocolAction: String =
     """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
 
-  private def metaDataAction(schema: StructType, id: String): String = {
+  private[graft] def metaDataAction(schema: StructType, id: String,
+                                    configuration: Map[String, String]): String = {
     val node = mapper.createObjectNode()
     val md = node.putObject("metaData")
     md.put("id", id)
     md.put("schemaString", schema.json)
     md.putObject("format").put("provider", "parquet")
     md.putArray("partitionColumns")
-    md.putObject("configuration")
+    val conf = md.putObject("configuration")
+    configuration.foreach { case (k, v) => conf.put(k, v) }
     md.put("createdTime", 0L)
     mapper.writeValueAsString(node)
   }
 
-  private def addAction(relPath: String, size: Long): String = {
+  private[graft] def addAction(add: Add): String = {
     val node = mapper.createObjectNode()
     val a = node.putObject("add")
-    a.put("path", relPath)
+    a.put("path", add.path)
     a.putObject("partitionValues")
-    a.put("size", size)
+    a.put("size", add.size)
     a.put("modificationTime", 0L)
     a.put("dataChange", true)
+    if (add.tags.nonEmpty) {
+      val tags = a.putObject("tags")
+      add.tags.foreach { case (k, v) => tags.put(k, v) }
+    }
     mapper.writeValueAsString(node)
   }
 
-  private def removeAction(relPath: String): String = {
+  private[graft] def removeAction(relPath: String): String = {
     val node = mapper.createObjectNode()
     val r = node.putObject("remove")
     r.put("path", relPath)
@@ -229,20 +255,23 @@ object DeltaLite {
     mapper.writeValueAsString(node)
   }
 
-  /** Write `df`'s parquet files under `<table>/<dirName>/` and return
-    * their table-relative paths + sizes. `dirName` is `v0` for create
-    * and a per-transaction `tx-…` directory for append/overwrite —
-    * staged ONCE before the first commit attempt, so losing the commit
-    * race never rewrites data (add paths are opaque to the protocol).
+  /** Write `df`'s parquet files under `<table>/<dirName>/`, in
+    * `partitionBy` directories below it, and return them as adds
+    * (table-relative path + size). `dirName` is `v0` for create and a
+    * per-transaction directory for append/overwrite — staged ONCE
+    * before the first commit attempt, so losing the commit race never
+    * rewrites data (add paths are opaque to the protocol).
     */
-  private def writeData(df: DataFrame, table: String,
-                        dirName: String): Seq[(String, Long)] = {
-    val dir = s"$table/$dirName"
-    df.write.mode("errorifexists").parquet(dir)
-    val f = fs(table)
-    f.listStatus(new Path(dir)).toSeq
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s"$dirName/${s.getPath.getName}", s.getLen))
+  private[graft] def writeData(df: DataFrame, table: String, dirName: String,
+                               partitionBy: Seq[String]): Seq[Add] = {
+    val dir = new Path(s"$table/$dirName")
+    df.write.mode("errorifexists").partitionBy(partitionBy: _*).parquet(dir.toString)
+    val f = fs(df.sparkSession, table)
+    val base = f.makeQualified(dir).toUri.getPath
+    def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      f.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    leaves(dir).filter(_.getPath.getName.endsWith(".parquet"))
+      .map(s => Add(dirName + s.getPath.toUri.getPath.stripPrefix(base), s.getLen, Map.empty))
   }
 
   private def txDir(): String =
@@ -253,13 +282,14 @@ object DeltaLite {
     * loser gets an error (there is no meaningful rebase for create).
     */
   def create(df: DataFrame, table: String): Long = {
-    require(versions(table).isEmpty, s"$table already has a _delta_log")
-    fs(table).mkdirs(logDir(table))
-    val files = writeData(df, table, "v0")
-    val won = tryPublish(table, 0L,
+    val spark = df.sparkSession
+    require(versions(spark, table).isEmpty, s"$table already has a _delta_log")
+    fs(spark, table).mkdirs(logDir(table))
+    val files = writeData(df, table, "v0", Nil)
+    val won = tryPublish(spark, table, 0L,
       Seq(protocolAction,
-        metaDataAction(df.schema, java.util.UUID.randomUUID.toString)) ++
-        files.map { case (p, s) => addAction(p, s) })
+        metaDataAction(df.schema, java.util.UUID.randomUUID.toString,
+          Map.empty)) ++ files.map(addAction))
     require(won, s"$table: concurrent create — another writer owns v0")
     0L
   }
@@ -268,21 +298,8 @@ object DeltaLite {
     * race rebases by just bumping the version (data staged once).
     */
   def append(df: DataFrame, table: String): Long = {
-    val files = writeData(df, table, txDir())
-    val adds = files.map { case (p, s) => addAction(p, s) }
-    commitWithRetry(table)(_ => adds)
-  }
-
-  /** Log-only append for scale probes and tests: one add action with a
-    * caller-supplied relative path — no data files are written, so a
-    * 10³-commit log can be built in milliseconds to measure replay cost
-    * in isolation (replay never opens data files). NOT part of the
-    * table API; no auto-checkpoint (probes cut their own).
-    */
-  private[graft] def syntheticAppend(table: String, v: Long,
-                                     relPath: String, size: Long): Long = {
-    writeCommit(table, v, Seq(addAction(relPath, size)))
-    v
+    val adds = writeData(df, table, txDir(), Nil).map(addAction)
+    commitWithRetry(df.sparkSession, table)(_ => adds)
   }
 
   /** Overwrite commit: remove every live file, add the new ones. A
@@ -293,11 +310,11 @@ object DeltaLite {
     * mode=overwrite).
     */
   def overwrite(df: DataFrame, table: String): Long = {
-    require(versions(table).nonEmpty, s"$table has no log — create first")
-    val files = writeData(df, table, txDir())
-    val adds = files.map { case (p, s) => addAction(p, s) }
-    commitWithRetry(table) { v =>
-      replayState(table, Some(v - 1)).adds.map(_._1)
+    val spark = df.sparkSession
+    require(versions(spark, table).nonEmpty, s"$table has no log — create first")
+    val adds = writeData(df, table, txDir(), Nil).map(addAction)
+    commitWithRetry(spark, table) { v =>
+      replayState(spark, table, Some(v - 1)).adds.map(_.path)
         .map(removeAction) ++ adds
     }
   }
@@ -306,12 +323,18 @@ object DeltaLite {
   // snapshot state: checkpoint + JSON tail
   // ------------------------------------------------------------------
 
-  /** Full replay state at one version: the declared schema, the
-    * metaData id, and the live files (table-relative path, size) in
-    * add order.
+  /** One live data file: table-relative path, size, and the add's
+    * `tags` (protocol-level string metadata, carried into checkpoints).
     */
-  private[graft] case class State(schema: StructType, metaId: String,
-                                  adds: Seq[(String, Long)])
+  private[graft] final case class Add(path: String, size: Long,
+                                      tags: Map[String, String])
+
+  /** Full replay state at one version: the declared schema, the
+    * metaData id and configuration, and the live files in add order.
+    */
+  private[graft] final case class State(schema: StructType, metaId: String,
+                                        configuration: Map[String, String],
+                                        adds: Seq[Add])
 
   /** Checkpoint parquet schema — the protocol's top-level action struct
     * columns (one row per action, exactly one struct non-null), as a
@@ -353,8 +376,31 @@ object DeltaLite {
           optional int64 size;
           optional int64 modificationTime;
           optional boolean dataChange;
+          optional group tags (MAP) {
+            repeated group key_value {
+              required binary key (UTF8);
+              optional binary value (UTF8);
+            }
+          }
         }
       }""")
+
+  private type Group = org.apache.parquet.example.data.Group
+
+  private def putMap(g: Group, field: String, m: Map[String, String]): Unit = {
+    val mg = g.addGroup(field) // present even when empty
+    m.foreach { case (k, v) => mg.addGroup("key_value").append("key", k).append("value", v) }
+  }
+
+  private def getMap(g: Group, field: String): Map[String, String] =
+    if (g.getFieldRepetitionCount(field) == 0) Map.empty
+    else {
+      val mg = g.getGroup(field, 0)
+      (0 until mg.getFieldRepetitionCount("key_value")).map { i =>
+        val kv = mg.getGroup("key_value", i)
+        kv.getString("key", 0) -> kv.getString("value", 0)
+      }.toMap
+    }
 
   /** Write the `%020d.checkpoint.parquet` + `_last_checkpoint` pair for
     * version `v`. Driver-side parquet-hadoop write — one tiny file,
@@ -362,16 +408,17 @@ object DeltaLite {
     * Commits call it automatically every [[CheckpointInterval]]
     * versions.
     */
-  private[graft] def writeCheckpoint(table: String, v: Long): Unit = {
+  private def writeCheckpoint(spark: SparkSession, table: String,
+                              v: Long): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val st = replayState(table, Some(v))
-    val f = fs(table)
+    val st = replayState(spark, table, Some(v))
+    val f = fs(spark, table)
     val cpPath = checkpointFile(table, v)
     if (f.exists(cpPath)) f.delete(cpPath, false)
     val writer = ExampleParquetWriter.builder(
       org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(cpPath, new Configuration()))
+        .fromPath(cpPath, spark.sparkContext.hadoopConfiguration))
       .withType(cpMessage).build()
     val factory = new SimpleGroupFactory(cpMessage)
     val gp = factory.newGroup()
@@ -384,20 +431,21 @@ object DeltaLite {
     md.addGroup("format").add("provider", "parquet")
     md.add("schemaString", st.schema.json)
     md.addGroup("partitionColumns") // present and empty
-    md.addGroup("configuration")    // present and empty
+    putMap(md, "configuration", st.configuration)
     md.add("createdTime", 0L)
     writer.write(gm)
-    st.adds.foreach { case (p, size) =>
+    st.adds.foreach { add =>
       val g = factory.newGroup()
       val a = g.addGroup("add")
-      a.add("path", p)
+      a.add("path", add.path)
       a.addGroup("partitionValues") // present and empty
-      a.add("size", size)
+      a.add("size", add.size)
       a.add("modificationTime", 0L)
       // delta-spark convention: checkpoint add entries carry
       // dataChange=false (they restate state, they are not new data);
       // state reconstruction ignores the flag either way
       a.add("dataChange", false)
+      putMap(a, "tags", add.tags)
       writer.write(g)
     }
     writer.close()
@@ -407,9 +455,9 @@ object DeltaLite {
     out.close()
   }
 
-  private def maybeCheckpoint(table: String, v: Long): Unit =
+  private def maybeCheckpoint(spark: SparkSession, table: String, v: Long): Unit =
     if (v > 0 && v % CheckpointInterval == 0)
-      writeCheckpoint(table, v)
+      writeCheckpoint(spark, table, v)
 
   /** Load a checkpoint parquet back into a seed [[State]]. Read
     * DRIVER-SIDE via parquet-hadoop's own reader — snapshot resolution
@@ -417,16 +465,16 @@ object DeltaLite {
     * single-digit milliseconds, so log replay latency is pure local IO
     * of the tail, O(tail) with a tiny constant.
     */
-  private def loadCheckpoint(table: String, v: Long): State = {
-    import org.apache.parquet.example.data.Group
+  private def loadCheckpoint(spark: SparkSession, table: String, v: Long): State = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     val reader: ParquetReader[Group] = ParquetReader
       .builder(new GroupReadSupport(), checkpointFile(table, v))
-      .withConf(new Configuration()).build()
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
     var schema: StructType = null
     var metaId: String = null
-    val adds = Seq.newBuilder[(String, Long)]
+    var configuration = Map.empty[String, String]
+    val adds = Seq.newBuilder[Add]
     try {
       var g = reader.read()
       while (g != null) {
@@ -435,17 +483,43 @@ object DeltaLite {
           schema = DataType.fromJson(md.getString("schemaString", 0))
             .asInstanceOf[StructType]
           metaId = md.getString("id", 0)
+          configuration = getMap(md, "configuration")
         }
         if (g.getFieldRepetitionCount("add") > 0) {
           val add = g.getGroup("add", 0)
-          adds += ((add.getString("path", 0), add.getLong("size", 0)))
+          adds += Add(add.getString("path", 0), add.getLong("size", 0),
+            getMap(add, "tags"))
         }
         g = reader.read()
       }
     } finally reader.close()
     require(schema != null, s"checkpoint $v carries no metaData")
-    State(schema, metaId, adds.result())
+    State(schema, metaId, configuration, adds.result())
   }
+
+  private def stringMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    if (node == null) Map.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      node.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+    }
+
+  /** The actions of commit `v`, one parsed JSON node per line. */
+  private def readCommit(spark: SparkSession, table: String,
+                         v: Long): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      fs(spark, table).open(commitFile(table, v)), "UTF-8"))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null)
+      .filter(_.nonEmpty).map(mapper.readTree).toList
+    finally in.close()
+  }
+
+  /** The `commitInfo` action of commit `v`, if it carries one. */
+  private[graft] def commitInfo(spark: SparkSession, table: String,
+                                v: Long): Option[com.fasterxml.jackson.databind.JsonNode] =
+    readCommit(spark, table, v).collectFirst {
+      case n if n.has("commitInfo") => n.get("commitInfo")
+    }
 
   /** State at `asOf` (default latest): seed from the newest checkpoint
     * ≤ `asOf`, then replay only the JSON commits after it. When the
@@ -458,10 +532,10 @@ object DeltaLite {
     * pointer yet, or time travel BEHIND the pointer (which then seeds
     * from an older checkpoint found by listing).
     */
-  private[graft] def replayState(table: String,
+  private[graft] def replayState(spark: SparkSession, table: String,
                                  asOf: Option[Long]): State = {
-    val f = fs(table)
-    val ptr = lastCheckpoint(table)
+    val f = fs(spark, table)
+    val ptr = lastCheckpoint(spark, table)
     val (cp, upTo): (Option[Long], Long) = (ptr, asOf) match {
       case (Some(v), None) =>
         // latest = pointer + contiguous tail, probed without a listing
@@ -473,52 +547,45 @@ object DeltaLite {
           s"version $u not in log")
         (Some(v), u)
       case _ => // no pointer, or time travel behind it
-        val vs = versions(table)
-        val cps = checkpointVersions(table)
+        val vs = versions(spark, table)
+        val cps = checkpointVersions(spark, table)
         require(vs.nonEmpty || cps.nonEmpty, s"$table has no _delta_log")
         val u = asOf.getOrElse((vs ++ cps).max)
         require(vs.contains(u) || cps.contains(u),
           s"version $u not in ${(vs ++ cps).distinct.sorted.mkString(",")}")
         (cps.filter(_ <= u).lastOption, u)
     }
-    val seed = cp.map(loadCheckpoint(table, _))
-    val live = scala.collection.mutable.LinkedHashMap[String, Long]()
-    seed.foreach(_.adds.foreach { case (p, s) => live(p) = s })
+    val seed = cp.map(loadCheckpoint(spark, table, _))
+    val live = scala.collection.mutable.LinkedHashMap[String, Add]()
+    seed.foreach(_.adds.foreach(a => live(a.path) = a))
     var schema: StructType = seed.map(_.schema).orNull
     var metaId: String = seed.map(_.metaId).orNull
+    var configuration = seed.fold(Map.empty[String, String])(_.configuration)
     ((cp.getOrElse(-1L) + 1) to upTo).foreach { v =>
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        f.open(commitFile(table, v)), "UTF-8"))
-      var line = in.readLine()
-      while (line != null) {
-        if (line.nonEmpty) {
-          val node = mapper.readTree(line)
-          if (node.has("add")) {
-            val a = node.get("add")
-            live(a.get("path").asText()) = a.get("size").asLong
-          } else if (node.has("remove"))
-            live -= node.get("remove").get("path").asText()
-          else if (node.has("metaData")) {
-            val md = node.get("metaData")
-            schema = DataType.fromJson(md.get("schemaString").asText())
-              .asInstanceOf[StructType]
-            metaId = md.get("id").asText()
-          }
+      readCommit(spark, table, v).foreach { node =>
+        if (node.has("add")) {
+          val a = node.get("add")
+          val path = a.get("path").asText()
+          live(path) = Add(path, a.get("size").asLong, stringMap(a.get("tags")))
+        } else if (node.has("remove"))
+          live -= node.get("remove").get("path").asText()
+        else if (node.has("metaData")) {
+          val md = node.get("metaData")
+          schema = DataType.fromJson(md.get("schemaString").asText())
+            .asInstanceOf[StructType]
+          metaId = md.get("id").asText()
+          configuration = stringMap(md.get("configuration"))
         }
-        line = in.readLine()
       }
-      in.close()
     }
     require(schema != null, s"$table log carries no metaData")
-    State(schema, metaId, live.toSeq)
+    State(schema, metaId, configuration, live.values.toSeq)
   }
 
-  /** Replay the log up to `asOf` (inclusive; default latest) → live
-    * table-relative file paths, in add order.
-    */
-  private[graft] def liveFiles(table: String,
-                               asOf: Option[Long]): Seq[String] =
-    replayState(table, asOf).adds.map(_._1)
+  /** Latest state, or None when `table` has no log yet. */
+  private[graft] def latest(spark: SparkSession, table: String): Option[State] =
+    if (fs(spark, table).exists(logDir(table))) Some(replayState(spark, table, None))
+    else None
 
   /** Snapshot read at `asOf` (default latest): the live files through
     * Spark's parquet reader under the log's declared schema. An empty
@@ -526,8 +593,8 @@ object DeltaLite {
     */
   def snapshot(spark: SparkSession, table: String,
                asOf: Option[Long] = None): DataFrame = {
-    val st = replayState(table, asOf)
-    val files = st.adds.map { case (p, _) => s"$table/$p" }
+    val st = replayState(spark, table, asOf)
+    val files = st.adds.map(a => s"$table/${a.path}")
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st.schema)
@@ -539,10 +606,10 @@ object DeltaLite {
     */
   def readChanges(spark: SparkSession, table: String, fromExclusive: Long,
                   toInclusive: Long): DataFrame = {
-    val before = replayState(table, Some(fromExclusive))
-      .adds.map(_._1).toSet
-    val after = replayState(table, Some(toInclusive))
-    val newFiles = after.adds.map(_._1).filterNot(before)
+    val before = replayState(spark, table, Some(fromExclusive))
+      .adds.map(_.path).toSet
+    val after = replayState(spark, table, Some(toInclusive))
+    val newFiles = after.adds.map(_.path).filterNot(before)
       .map(p => s"$table/$p")
     if (newFiles.isEmpty)
       spark.createDataFrame(

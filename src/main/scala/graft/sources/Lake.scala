@@ -1,9 +1,10 @@
 package graft.sources
 
 import graft.model.FeatureGroup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** Commit-logged lakehouse table: the engine's analog of the reference's
   * Hudi/Delta feature-group storage (python/hsfs/core/hudi_engine.py:85-274,
@@ -11,43 +12,50 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `root`:
   * {{{
-  *   data/_commit_time=[epochMillis]/part-NNN.parquet  (one partition per commit)
-  *   commits/part-NNN.json                             (commit metadata rows)
+  *   _delta_log/%020d.json                          ([[DeltaLite]] transaction log)
+  *   data/_tx=[id]/[partitionKey=v/]part-NNN.parquet (one directory per commit)
   * }}}
   *
-  * Design notes for scale:
-  *  - Each commit is a parquet partition keyed by `_commit_time`, so
-  *    time-travel and incremental reads become **partition pruning** — a
-  *    100 TB table as-of t scans only commits ≤ t, and an incremental read
-  *    scans only the (t0, t1] partitions.
-  *  - Writes are append-only (merge-on-read): upsert/delete append rows and
-  *    tombstones; the snapshot read resolves the latest version per record
-  *    key with one window over the record key — the same shuffle a
-  *    MERGE INTO would need, but without rewriting existing files.
-  *  - `compact()` rewrites the current snapshot as a single base commit to
-  *    bound read amplification, mirroring Hudi compaction.
+  * Every commit is ONE [[DeltaLite]] version, published by its
+  * put-if-absent + rebase loop ([[DeltaLite.transact]]):
+  *  - the commit's rows are staged once under a fresh `data/_tx=[id]/`
+  *    and become `add` actions; a writer that crashes before publishing
+  *    leaves a directory no read ever lists;
+  *  - a `commitInfo` action carries the commit time, the operation and
+  *    the inserted / updated / deleted counts ([[commitDetails]]);
+  *  - the commit time is assigned inside each publish attempt as
+  *    max(now, head time + 1), so times rise strictly with version and
+  *    two writers in one millisecond still get distinct commits. Each
+  *    `add` carries its rows' time in `tags`, so the live set at any
+  *    version (checkpoint + tail) maps every commit directory to its time.
+  *
+  * Reads resolve the live commits from the log and hand Spark one
+  * directory per commit, so time travel and incremental reads are
+  * driver-side pruning — a 100 TB table as-of t scans only commits ≤ t,
+  * an incremental read only the (t0, t1] commits.
+  *
+  * Writes are append-only (merge-on-read): upsert/delete append rows and
+  * tombstones; the snapshot read resolves the latest version per record
+  * key with one window — the same shuffle a MERGE INTO would need,
+  * without rewriting existing files. `compact` and `cleanCommits` are
+  * each one version that removes the replaced commits and adds a
+  * squashed base (Hudi compaction / archived timeline), then delete the
+  * removed directories. They set the retention horizon in the log's
+  * `metaData.configuration`; time travel before it fails fast.
   *
   * Record identity = primary key + event time (hudi record-key semantics,
   * core/hudi_engine.py:122-145); duplicate versions resolved by
   * (_commit_time desc, precombine desc) — last writer wins, ties broken by
-  * the precombine column (core/hudi_engine.py:141-149).
+  * the precombine column (core/hudi_engine.py:141-149). `_commit_time` is
+  * always the logged time of the commit holding the row.
   */
 object Lake {
 
-  import org.apache.hadoop.fs.{FileSystem, Path}
-
   val CommitCol = "_commit_time"
   val DeletedCol = "_deleted"
-
-  /** All filesystem access goes through the Hadoop FileSystem resolved
-    * from the path's scheme + the session's hadoopConfiguration, so the
-    * commit log works wherever the table lives (HDFS/S3/ABFS/local) —
-    * never driver-local java.io.File.
-    */
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  private val TxCol = "_tx"
+  private val TimeTag = "commitTime"
+  private val HorizonKey = "graft.lake.horizon"
 
   final case class CommitMeta(
       commitTime: Long,
@@ -57,254 +65,264 @@ object Lake {
       rowsDeleted: Long)
 
   private def dataPath(root: String) = s"$root/data"
-  private def commitsPath(root: String) = s"$root/commits"
+  private def txPath(root: String, tx: Long) = s"${dataPath(root)}/$TxCol=$tx"
+
+  /** Through the session's Hadoop conf, like every other access. */
+  private def deleteTx(spark: SparkSession, root: String, tx: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(txPath(root, tx))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   private def recordKey(fg: FeatureGroup): Seq[String] =
     (fg.primaryKey ++ fg.eventTime).distinct
 
-  /** Commit times present in the table, ascending (from the partition
-    * layout, not the metadata — data is the source of truth).
+  /** One live commit: its transaction id, logged time and data files. */
+  private final case class Commit(tx: Long, time: Long, files: Seq[String])
+
+  /** Live commits in time order (adds are `data/_tx=[id]/...`). */
+  private def commits(st: Option[DeltaLite.State]): Seq[Commit] =
+    st.fold(Seq.empty[DeltaLite.Add])(_.adds)
+      .groupBy(_.path.split('/')(1).stripPrefix(s"$TxCol=").toLong)
+      .map { case (tx, adds) =>
+        Commit(tx, adds.head.tags(TimeTag).toLong, adds.map(_.path))
+      }
+      .toSeq.sortBy(_.time)
+
+  private def horizon(st: Option[DeltaLite.State]): Option[Long] =
+    st.flatMap(_.configuration.get(HorizonKey)).map(_.toLong)
+
+  /** Feature columns of the table: the declared features, else the
+    * logged schema (schema-less groups widen it commit by commit).
     */
-  def listCommits(spark: SparkSession, root: String): Seq[Long] = {
-    val (fs, p) = fsOf(spark, dataPath(root))
-    if (!fs.exists(p)) Seq.empty
-    else
-      fs.listStatus(p).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith(s"$CommitCol=") =>
-          n.stripPrefix(s"$CommitCol=").toLong
-        }
-        .sorted
+  private def columns(fg: FeatureGroup, st: Option[DeltaLite.State]): StructType =
+    if (fg.features.nonEmpty || st.isEmpty) fg.schema
+    else StructType(st.get.schema.filterNot(_.name == DeletedCol))
+
+  /** Commit times of the live commits, ascending. */
+  def listCommits(spark: SparkSession, root: String): Seq[Long] =
+    commits(DeltaLite.latest(spark, root)).map(_.time)
+
+  /** The rows of `cs` under an explicit schema — no footer sweep, and
+    * files predating an appended column surface it as null — with each
+    * row's logged commit time and tombstone flag. One directory per
+    * commit, below `basePath` so `_tx` and the partition keys come back
+    * as columns.
+    */
+  private def rows(spark: SparkSession, root: String, schema: StructType,
+                   cs: Seq[Commit]): DataFrame = {
+    val full = StructType(schema.fields :+ StructField(DeletedCol, BooleanType) :+
+      StructField(TxCol, LongType))
+    val raw =
+      if (cs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), full)
+      else spark.read.schema(full).option("basePath", dataPath(root))
+        .parquet(cs.map(c => txPath(root, c.tx)): _*)
+    raw.withColumn(CommitCol,
+        element_at(typedLit(cs.map(c => c.tx -> c.time).toMap), col(TxCol)))
+      .drop(TxCol)
   }
 
-  /** The raw commit-log scan (reference schema reconciliation,
-    * core/hudi_engine.py:226-244). With a declared feature schema the read
-    * passes it EXPLICITLY — no `mergeSchema` footer sweep over every
-    * file on every read (a per-read O(files) driver cost on long
-    * histories), and files predating an appended column surface it as
-    * null exactly as the merged scan would (snapshot() then fills
-    * declared defaults). Only schema-less groups (fg.features empty)
-    * still pay the merge, since there is nothing to declare.
-    */
-  private def rawData(spark: SparkSession, root: String,
-                      fg: FeatureGroup): DataFrame =
-    if (fg.features.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(dataPath(root))
-    else {
-      val schema = org.apache.spark.sql.types.StructType(
-        fg.schema.fields.toSeq :+
-          org.apache.spark.sql.types.StructField(CommitCol,
-            org.apache.spark.sql.types.LongType) :+
-          org.apache.spark.sql.types.StructField(DeletedCol,
-            org.apache.spark.sql.types.BooleanType))
-      spark.read.schema(schema).parquet(dataPath(root))
-    }
+  /** Latest live row per record key, in `schema`'s column order. */
+  private def resolve(raw: DataFrame, fg: FeatureGroup,
+                      schema: StructType): DataFrame =
+    dedupLatest(raw, fg).filter(!col(DeletedCol))
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
 
-  /** Append one commit of rows (already stamped with tombstone flag). */
+  /** Read-path safety net for tables created before a column was
+    * declared: appended columns surface as null for older commits and
+    * fill their declared defaults here.
+    */
+  private def withDefaults(df: DataFrame, fg: FeatureGroup): DataFrame =
+    if (fg.features.isEmpty) df
+    else graft.ops.SchemaOps.alignToFeatures(df, fg.features, fillNullDefaults = true)
+
+  /** The state of `cs` as a snapshot reads it. */
+  private def state(spark: SparkSession, root: String, fg: FeatureGroup,
+                    st: Option[DeltaLite.State], cs: Seq[Commit]): DataFrame = {
+    val schema = columns(fg, st)
+    withDefaults(resolve(rows(spark, root, schema, cs), fg, schema), fg)
+  }
+
+  /** Rows written under a fresh transaction directory, not yet in the log. */
+  private final case class Staged(tx: Long, files: Seq[DeltaLite.Add],
+                                  rows: Long, schema: StructType)
+
+  /** Write `df` (tombstone flag included) under `data/_tx=[id]/`, then
+    * the feature group's partition keys (reference partitionBy,
+    * engine/spark.py:501-505). The row count rides the write as an
+    * `observe` metric. A commit of no rows keeps no files.
+    */
+  private def stage(spark: SparkSession, root: String, fg: FeatureGroup,
+                    df: DataFrame): Staged = {
+    val tx = java.util.concurrent.ThreadLocalRandom.current.nextLong(Long.MaxValue)
+    val obs = Observation()
+    val files = DeltaLite.writeData(df.observe(obs, count(lit(1)).as("n")), root,
+      s"data/$TxCol=$tx", fg.partitionKey.filter(df.columns.contains))
+    val n = obs.get("n").toString.toLong
+    if (n == 0) deleteTx(spark, root, tx)
+    Staged(tx, if (n == 0) Nil else files, n, df.schema)
+  }
+
+  /** What one publish attempt commits: the staged rows and the time
+    * they carry, the commits it replaces, the horizon it sets, and its
+    * counts.
+    */
+  private final case class Change(staged: Staged, time: Long, removed: Seq[Commit],
+                                  horizon: Option[Long], counts: (Long, Long, Long))
+
+  /** Publish one version. `change(head, t)` runs inside every attempt
+    * against the state at v − 1 (None for v0) and the attempt's commit
+    * time t; None abandons the commit. Staging an attempt superseded
+    * is deleted; after publishing, so are the directories of the
+    * commits the version removed.
+    */
+  private def publish(spark: SparkSession, root: String, operation: String)
+                     (change: (Option[DeltaLite.State], Long) => Option[Change])
+      : Option[CommitMeta] = {
+    var last: Option[Change] = None
+    var meta: CommitMeta = null
+    val published = DeltaLite.transact(spark, root) { v =>
+      val head = if (v == 0) None else Some(DeltaLite.replayState(spark, root, Some(v - 1)))
+      val headTime = if (v == 0) 0L else DeltaLite.commitInfo(spark, root, v - 1)
+        .fold(0L)(_.get(TimeTag).asLong)
+      val t = math.max(System.currentTimeMillis(), headTime + 1)
+      val c = change(head, t)
+      for (old <- last; if !c.exists(_.staged.tx == old.staged.tx))
+        deleteTx(spark, root, old.staged.tx)
+      last = c
+      c.map { c =>
+        val (ins, upd, del) = c.counts
+        meta = CommitMeta(t, operation, ins, upd, del)
+        val logged = head.fold(new StructType())(_.schema)
+        val schema = StructType(logged.fields ++
+          c.staged.schema.fields.filterNot(f => logged.fieldNames.contains(f.name)))
+        val conf = head.fold(Map.empty[String, String])(_.configuration) ++
+          c.horizon.map(h => HorizonKey -> h.toString)
+        val metaData =
+          if (head.nonEmpty && schema == logged && c.horizon.isEmpty) Nil
+          else Seq(DeltaLite.metaDataAction(schema,
+            head.fold(java.util.UUID.randomUUID.toString)(_.metaId), conf))
+        (if (head.isEmpty) Seq(DeltaLite.protocolAction) else Nil) ++ metaData ++
+          c.removed.flatMap(_.files).map(DeltaLite.removeAction) ++
+          c.staged.files.map(a =>
+            DeltaLite.addAction(a.copy(tags = Map(TimeTag -> c.time.toString)))) :+
+          s"""{"commitInfo":{"$TimeTag":$t,"operation":"$operation",""" +
+            s""""rowsInserted":$ins,"rowsUpdated":$upd,"rowsDeleted":$del}}"""
+      }
+    }
+    for (c <- last; _ <- published; r <- c.removed) deleteTx(spark, root, r.tx)
+    published.map(_ => meta)
+  }
+
+  /** Append one commit of rows. Staged once: a lost race reuses the
+    * files and recomputes the counts against the new head.
+    *
+    * Counts classify the commit for metadata parity with Hudi commit
+    * stats (core/hudi_engine.py:246-274): the row count comes from the
+    * staging write; updates are the batch keys live at the head,
+    * resolved ONLY for those keys — the live commits are semi-pruned by
+    * the batch's key set before the latest-version window, so an upsert
+    * of k keys into a 100 TB table shuffles O(k · versions) rows, never
+    * the whole snapshot. `computeStats = false` skips that job (stream
+    * commits shouldn't rescan the table per micro-batch).
+    */
   private def writeCommit(
       spark: SparkSession,
       root: String,
       fg: FeatureGroup,
-      rows: DataFrame,
-      deleted: Boolean,
+      df: DataFrame,
       operation: String,
-      computeStats: Boolean = true): CommitMeta = {
-    // one FS listing serves both the commit-time allocation and the
-    // first-commit check below
-    val priorCommits = listCommits(spark, root)
-    val t = math.max(System.currentTimeMillis(),
-      priorCommits.lastOption.getOrElse(0L) + 1)
+      computeStats: Boolean): CommitMeta = {
     // schema evolution at write time: a batch missing declared columns
     // gets them appended with their declared defaults (feature_group.py:853,
     // engine/spark.py:1251-1265) so every commit carries the full schema
     val aligned =
-      if (fg.features.nonEmpty)
-        graft.ops.SchemaOps.alignToFeatures(rows, fg.features)
-      else rows
-    val stamped = aligned
-      .withColumn(CommitCol, lit(t))
-      .withColumn(DeletedCol, lit(deleted))
-
-    // Classify the commit for metadata parity with Hudi commit stats
-    // (core/hudi_engine.py:246-274): ONE action — left join against current
-    // snapshot keys, counting total and matched together. `computeStats =
-    // false` skips the snapshot scan entirely (high-frequency streaming
-    // commits shouldn't rescan the table per micro-batch).
-    //
-    // First commit (r14, guide §1.2 — don't compute things twice): the
-    // row count rides the WRITE action as an `observe` metric instead of
-    // a dedicated `rows.count()` pass — a bulk insert used to scan its
-    // entire input once to count it and once to write it; at 100 TB
-    // that second scan is a full extra pass over the corpus. The
-    // non-first path must still run BEFORE the write (its semi-join
-    // resolves the table state the commit is mutating), so it keeps its
-    // single pre-write action.
-    val keys = recordKey(fg)
-    val firstCommit = priorCommits.isEmpty
-    val obs =
-      if (computeStats && firstCommit)
-        Some(org.apache.spark.sql.Observation(s"graft_commit_$t"))
-      else None
-    val (preIns, preUpd, preDel) =
-      if (!computeStats) (-1L, -1L, -1L)
-      else if (firstCommit) (0L, 0L, 0L) // resolved from obs after the write
-      else {
-        // incremental stats: resolve current state ONLY for the incoming
-        // keys — semi-prune the commit log by the batch's key set before
-        // the latest-version window, so an upsert of k keys into a 100 TB
-        // table shuffles O(k · versions) rows, never the whole snapshot
-        val incoming = aligned.select(keys.map(col): _*).distinct()
-        val pruned = rawData(spark, root, fg).join(incoming, keys, "left_semi")
-        val current = restoreTypes(
-            dedupLatest(pruned, fg).filter(!col(DeletedCol))
-              .drop(CommitCol, DeletedCol), fg)
-          .select(keys.map(col): _*).withColumn("_m", lit(1))
-        val r = aligned.select(keys.map(col): _*)
-          .join(current, keys, "left")
-          .agg(count(lit(1)).as("n"), sum(col("_m")).as("m"))
-          .collect().head
-        val total = r.getLong(0)
-        val matched = if (r.isNullAt(1)) 0L else r.getLong(1)
-        if (deleted) (0L, 0L, matched) else (total - matched, matched, 0L)
-      }
-
-    // physical layout: commit partition first (time travel = pruning),
-    // then the feature group's declared partition keys (query-predicate
-    // pruning — reference partitionBy(partition_key),
-    // engine/spark.py:501-505, hudi partition path hudi_engine.py:131-140)
-    val partCols = CommitCol +: fg.partitionKey.filter(stamped.columns.contains)
-    val toWrite = obs.fold(stamped)(o =>
-      stamped.observe(o, count(lit(1)).as("n")))
-    toWrite.write
-      .mode(SaveMode.Append)
-      .partitionBy(partCols: _*)
-      .parquet(dataPath(root))
-
-    val (ins, upd, del) = obs match {
-      case None => (preIns, preUpd, preDel)
-      case Some(o) =>
-        // the write action above completed, so the observed metrics are
-        // final — same value the old rows.count() pass produced, zero
-        // extra scans
-        val n = o.get("n") match {
-          case l: java.lang.Long => l.longValue()
-          case other => other.toString.toLong
+      if (fg.features.nonEmpty) graft.ops.SchemaOps.alignToFeatures(df, fg.features)
+      else df
+    val staged = stage(spark, root, fg, aligned.withColumn(DeletedCol, lit(false)))
+    publish(spark, root, operation) { (head, t) =>
+      val live = commits(head)
+      val counts =
+        if (!computeStats) (-1L, -1L, -1L)
+        else if (live.isEmpty || staged.rows == 0) (staged.rows, 0L, 0L)
+        else {
+          val keys = recordKey(fg)
+          val incoming = aligned.select(keys.map(col): _*)
+          val schema = columns(fg, head)
+          val current = resolve(rows(spark, root, schema, live)
+              .join(incoming.distinct(), keys, "left_semi"), fg, schema)
+            .select(keys.map(col): _*).withColumn("_m", lit(1))
+          val r = incoming.join(current, keys, "left").agg(sum(col("_m"))).collect().head
+          val matched = if (r.isNullAt(0)) 0L else r.getLong(0)
+          (staged.rows - matched, matched, 0L)
         }
-        if (deleted) (0L, 0L, n) else (n, 0L, 0L)
-    }
-    val meta = CommitMeta(t, operation, ins, upd, del)
-    // one-ROW metadata goes through the Hadoop FS directly: a single-row
-    // DataFrame json job (plan + task + _SUCCESS) per commit was pure
-    // lifecycle overhead across every lake query (r12 verdict #4). The
-    // read side (spark.read.json over the directory) is unchanged and
-    // still reads logs written by the old DataFrame path.
-    val line = s"""{"commitTime":$t,"operation":"$operation",""" +
-      s""""rowsInserted":$ins,"rowsUpdated":$upd,"rowsDeleted":$del}"""
-    val (cfs, cdir) = fsOf(spark, commitsPath(root))
-    cfs.mkdirs(cdir)
-    val f = new Path(cdir, s"commit-$t-${System.nanoTime()}.json")
-    val os = cfs.create(f, false)
-    try os.write((line + "\n").getBytes("UTF-8")) finally os.close()
-    meta
+      Some(Change(staged, t, Nil, None, counts))
+    }.get
   }
 
   /** First write / bulk insert. */
   def create(spark: SparkSession, root: String, fg: FeatureGroup,
              df: DataFrame): CommitMeta =
-    writeCommit(spark, root, fg, df, deleted = false, operation = "bulk_insert")
+    writeCommit(spark, root, fg, df, "bulk_insert", computeStats = true)
 
   /** Upsert: append-new-version semantics; snapshot read resolves the
     * winner (hudi upsert, core/hudi_engine.py:85-169).
     */
   def upsert(spark: SparkSession, root: String, fg: FeatureGroup,
              df: DataFrame, computeStats: Boolean = true): CommitMeta =
-    writeCommit(spark, root, fg, df, deleted = false, operation = "upsert",
+    writeCommit(spark, root, fg, df, operation = "upsert",
       computeStats = computeStats)
 
   /** Delete by key: tombstone append (EmptyHoodieRecordPayload analog,
-    * core/hudi_engine.py:94-100).
+    * core/hudi_engine.py:94-100). A tombstone carries the record's
+    * state at the head, so each attempt restages against its head;
+    * the live commits are semi-pruned by the deleted keys BEFORE the
+    * latest-version window, so deleting k keys never windows the table.
     */
   def delete(spark: SparkSession, root: String, fg: FeatureGroup,
              keysDf: DataFrame): CommitMeta = {
-    // a tombstone row carries the record key's current state; semi-prune
-    // the commit log by the deleted keys BEFORE the latest-version window
-    // so deleting k keys never windows the full table
     val keys = recordKey(fg)
     val kdf = keysDf.select(keys.map(col): _*).distinct()
-    val pruned = rawData(spark, root, fg).join(kdf, keys, "left_semi")
-    val full = restoreTypes(
-      dedupLatest(pruned, fg).filter(!col(DeletedCol))
-        .drop(CommitCol, DeletedCol), fg)
-    writeCommit(spark, root, fg, full, deleted = true, operation = "delete")
+    publish(spark, root, "delete") { (head, t) =>
+      val schema = columns(fg, head)
+      val tombstones = resolve(rows(spark, root, schema, commits(head))
+        .join(kdf, keys, "left_semi"), fg, schema)
+      val s = stage(spark, root, fg, tombstones.withColumn(DeletedCol, lit(true)))
+      Some(Change(s, t, Nil, None, (0L, 0L, s.rows)))
+    }.get
   }
 
+  private def beforeHorizon(what: String, t: Long, h: Long) =
+    new IllegalArgumentException(s"$what $t predates the retained commit " +
+      s"horizon $h (older commits were compacted or cleaned)")
+
   /** Latest-state (or as-of) read. `asOf` in epoch millis, inclusive —
-    * hudi `as.of.instant` semantics (core/hudi_engine.py:180-192).
+    * hudi `as.of.instant` semantics (core/hudi_engine.py:180-192): the
+    * live commits with time ≤ `asOf`.
     */
   def snapshot(spark: SparkSession, root: String, fg: FeatureGroup,
                asOf: Option[Long]): DataFrame = {
-    pendingOpGuard(spark, root)
-    if (listCommits(spark, root).isEmpty) {
-      // schema-only table (e.g. created from an empty frame): no partitions
-      // exist yet, so return an empty frame with the declared schema
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), fg.schema)
-    }
-    for (h <- commitHorizon(spark, root); t <- asOf; if t < h)
-      throw new IllegalArgumentException(
-        s"as_of $t predates the retained commit horizon $h " +
-          "(older commits were cleaned; see cleanCommits)")
-    val raw0 = rawData(spark, root, fg)
-    val raw = asOf.fold(raw0)(t => raw0.filter(col(CommitCol) <= t))
-    val resolved = dedupLatest(raw, fg)
-      .filter(!col(DeletedCol))
-      .drop(CommitCol, DeletedCol)
-    // read-path safety net for tables created before a column was
-    // declared: appended columns surface as null for pre-append commits
-    // under the merged-schema scan and fill their declared defaults here
-    val aligned =
-      if (fg.features.nonEmpty)
-        graft.ops.SchemaOps.alignToFeatures(resolved, fg.features,
-          fillNullDefaults = true)
-      else resolved
-    restoreTypes(aligned, fg)
+    val st = DeltaLite.latest(spark, root)
+    for (h <- horizon(st); t <- asOf; if t < h) throw beforeHorizon("as_of", t, h)
+    state(spark, root, fg, st, commits(st).filter(c => asOf.forall(c.time <= _)))
   }
-
-  /** Partition-column values come back through directory inference with
-    * possibly narrowed types (e.g. long → int) and reordered to the end;
-    * cast and reorder back to the declared feature-group schema, keeping
-    * any undeclared extra columns.
-    */
-  private def restoreTypes(df: DataFrame, fg: FeatureGroup): DataFrame =
-    if (fg.features.isEmpty) df
-    else {
-      val declared = fg.schema.fields.filter(f => df.columns.contains(f.name))
-      val extras = df.columns.filterNot(fg.schema.fieldNames.contains)
-      df.select(declared.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) ++
-        extras.map(col(_)): _*)
-    }
 
   /** Incremental read: latest state of records changed in (t0, t1]
     * (hudi incremental query, core/hudi_engine.py:193-219).
     */
   def readChanges(spark: SparkSession, root: String, fg: FeatureGroup,
                   exclusiveStart: Long, inclusiveEnd: Long): DataFrame = {
-    pendingOpGuard(spark, root)
-    // the squashed base commit sits at the horizon time: any range whose
-    // start would include it is not a true incremental read
-    for (h <- commitHorizon(spark, root); if exclusiveStart < h)
-      throw new IllegalArgumentException(
-        s"incremental read from $exclusiveStart predates the retained " +
-          s"commit horizon $h (older commits were cleaned)")
-    val raw = rawData(spark, root, fg)
-      .filter(col(CommitCol) > exclusiveStart && col(CommitCol) <= inclusiveEnd)
-    restoreTypes(dedupLatest(raw, fg)
-      .filter(!col(DeletedCol))
-      .drop(CommitCol, DeletedCol), fg)
+    val st = DeltaLite.latest(spark, root)
+    // the squashed base sits at the horizon time: any range whose start
+    // would include it is not a true incremental read
+    for (h <- horizon(st); if exclusiveStart < h)
+      throw beforeHorizon("incremental read from", exclusiveStart, h)
+    val schema = columns(fg, st)
+    val cs = commits(st).filter(c => c.time > exclusiveStart && c.time <= inclusiveEnd)
+    resolve(rows(spark, root, schema, cs), fg, schema)
   }
 
   /** Resolve one winning row per record key: greatest (_commit_time,
-    * precombine). The only shuffle in the read path; partition pruning has
+    * precombine). The only shuffle in the read path; commit pruning has
     * already bounded its input.
     */
   private def dedupLatest(df: DataFrame, fg: FeatureGroup): DataFrame = {
@@ -324,150 +342,65 @@ object Lake {
     if (k.nonEmpty) k else df.columns.filterNot(Seq(CommitCol, DeletedCol).contains).toSeq
   }
 
-  /** Rewrite the current snapshot as a single base commit and drop older
-    * partitions — bounds merge-on-read amplification (Hudi compaction
-    * analog). Destructive; call between queries only.
+  /** Rewrite the current snapshot as one base commit at the compaction's
+    * own time, removing every live commit — bounds merge-on-read
+    * amplification (Hudi compaction analog). The timeline restarts at
+    * the base: the horizon moves to it. The removed directories are
+    * deleted once the version is published: a concurrent writer
+    * rebases, but a read planned before then fails — compact between
+    * queries.
     */
-  def compact(spark: SparkSession, root: String, fg: FeatureGroup): CommitMeta = {
-    val snap = snapshot(spark, root, fg, None).cache()
-    snap.count() // force before we delete source files
-    val tmp = s"$root/compact_tmp"
-    snap.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val (fs, dp) = fsOf(spark, dataPath(root))
-    fs.delete(dp, true)
-    val reread = spark.read.parquet(tmp)
-    val meta = writeCommit(spark, root, fg, reread, deleted = false,
-      operation = "compact")
-    snap.unpersist()
-    fs.delete(new Path(tmp), true)
-    meta
-  }
+  def compact(spark: SparkSession, root: String, fg: FeatureGroup): CommitMeta =
+    publish(spark, root, "compact") { (head, t) =>
+      val live = commits(head)
+      val s = stage(spark, root, fg,
+        state(spark, root, fg, head, live).withColumn(DeletedCol, lit(false)))
+      Some(Change(s, t, live, Some(t), (s.rows, 0L, 0L)))
+    }.get
 
-  // -- commit retention ------------------------------------------------------
-
-  private def horizonPath(root: String) = s"$root/_commit_horizon"
-
-  /** Oldest commit time still valid for time travel, if retention has ever
-    * run (None = full history available).
+  /** Oldest commit time still valid for time travel, if compaction or
+    * retention has ever run (None = full history available).
     */
-  def commitHorizon(spark: SparkSession, root: String): Option[Long] = {
-    val (fs, p) = fsOf(spark, horizonPath(root))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+  def commitHorizon(spark: SparkSession, root: String): Option[Long] =
+    horizon(DeltaLite.latest(spark, root))
 
   /** Bound the active timeline to the last `keepLast` commits (the
     * reference keeps a bounded Hudi active timeline — commits beyond it
     * are archived; constructor/query.py:367-372). Everything older is
-    * squashed into a single base commit at the newest archived commit
-    * time, so snapshots/as-of/incremental reads at or after the horizon
-    * are unchanged while the commit-partition count (and merge-on-read
+    * squashed into one base commit at the newest archived commit time,
+    * so snapshots/as-of/incremental reads at or after the horizon are
+    * unchanged while the live commit count (and merge-on-read
     * amplification) stays bounded. Time travel BEFORE the horizon fails
     * fast with a clear error instead of returning partial state.
-    * Destructive; call between queries only. Returns the retained commits.
+    * Returns the retained commits.
     */
   def cleanCommits(spark: SparkSession, root: String, fg: FeatureGroup,
                    keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    recoverPendingClean(spark, root, fg)
-    val commits = listCommits(spark, root)
-    if (commits.length <= keepLast) return commits
-    val archived = commits.dropRight(keepLast)
-    val baseT = archived.last
-    // resolved state as of the horizon: tombstones fully applied, so the
-    // base commit needs no deleted rows at all
-    val base = snapshot(spark, root, fg, Some(baseT))
-      .withColumn(CommitCol, lit(baseT))
-      .withColumn(DeletedCol, lit(false))
-    val tmp = s"$root/clean_tmp"
-    base.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // COMMIT POINT: the horizon marker goes down while the squashed base
-    // still lives in clean_tmp and the archived partitions are untouched.
-    // A crash anywhere past this line is detected (reads fail fast on the
-    // tmp dir via pendingOpGuard) and replayed idempotently by
-    // recoverPendingClean from marker + tmp; a crash before it leaves the
-    // table fully intact (the orphan tmp is discarded on the next run).
-    writeHorizon(spark, root, baseT)
-    val (fs, _) = fsOf(spark, root)
-    archived.foreach { t =>
-      fs.delete(new Path(s"${dataPath(root)}/$CommitCol=$t"), true)
+    publish(spark, root, "clean") { (head, _) =>
+      val live = commits(head)
+      if (live.length <= keepLast) None
+      else {
+        val archived = live.dropRight(keepLast)
+        val s = stage(spark, root, fg,
+          state(spark, root, fg, head, archived).withColumn(DeletedCol, lit(false)))
+        Some(Change(s, archived.last.time, archived, Some(archived.last.time),
+          (s.rows, 0L, 0L)))
+      }
     }
-    val reread = spark.read.parquet(tmp)
-    val partCols =
-      CommitCol +: fg.partitionKey.filter(reread.columns.contains)
-    reread.write.mode(SaveMode.Append).partitionBy(partCols: _*)
-      .parquet(dataPath(root))
-    fs.delete(new Path(tmp), true)
     listCommits(spark, root)
   }
 
-  private def writeHorizon(spark: SparkSession, root: String, t: Long): Unit = {
-    val (fs, p) = fsOf(spark, horizonPath(root))
-    val out = fs.create(p, true)
-    try out.write(t.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Fail reads fast while a crashed maintenance op has the table in an
-    * intermediate state, instead of silently serving partial history.
+  /** Commit metadata log, one row per version (rows inserted / updated /
+    * deleted per commit — core/hudi_engine.py:246-274 parity).
     */
-  private def pendingOpGuard(spark: SparkSession, root: String): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    if (fs.exists(new Path(s"$root/clean_tmp")))
-      throw new IllegalStateException(
-        s"interrupted cleanCommits at $root — re-run cleanCommits to " +
-          s"recover (the squashed base is preserved in $root/clean_tmp)")
-    if (fs.exists(new Path(s"$root/compact_tmp")))
-      throw new IllegalStateException(
-        s"interrupted compact at $root — the full snapshot is preserved " +
-          s"in $root/compact_tmp")
+  def commitDetails(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    DeltaLite.versions(spark, root)
+      .flatMap(DeltaLite.commitInfo(spark, root, _))
+      .map(n => CommitMeta(n.get(TimeTag).asLong, n.get("operation").asText,
+        n.get("rowsInserted").asLong, n.get("rowsUpdated").asLong,
+        n.get("rowsDeleted").asLong))
+      .toDF()
   }
-
-  /** Complete (or discard) a cleanCommits run that crashed mid-operation.
-    * The tmp's own `_commit_time` column tells which case we're in: if it
-    * matches the horizon marker the crash was PAST the commit point →
-    * replay the deletes + base append (idempotent: the base partition at
-    * the horizon time is itself re-deleted first, so a partially appended
-    * base can't double up); otherwise the run aborted before its marker
-    * and the original table is intact → discard the orphan tmp.
-    */
-  private def recoverPendingClean(spark: SparkSession, root: String,
-                                  fg: FeatureGroup): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    val tmp = new Path(s"$root/clean_tmp")
-    if (!fs.exists(tmp)) return
-    if (!fs.exists(new Path(s"$root/clean_tmp/_SUCCESS"))) {
-      // tmp write itself crashed — strictly before the commit point
-      fs.delete(tmp, true)
-      return
-    }
-    val tmpDf = spark.read.parquet(s"$root/clean_tmp")
-    val baseT = tmpDf.select(CommitCol).take(1).headOption match {
-      case Some(r) => r.getLong(0)
-      case None => throw new IllegalStateException(
-        s"interrupted cleanCommits at $root left an empty squashed base; " +
-          "cannot determine its horizon — inspect clean_tmp and the " +
-          "_commit_horizon marker manually")
-    }
-    if (commitHorizon(spark, root).contains(baseT)) {
-      listCommits(spark, root).filter(_ <= baseT).foreach { t =>
-        fs.delete(new Path(s"${dataPath(root)}/$CommitCol=$t"), true)
-      }
-      val partCols = CommitCol +: fg.partitionKey.filter(tmpDf.columns.contains)
-      tmpDf.write.mode(SaveMode.Append).partitionBy(partCols: _*)
-        .parquet(dataPath(root))
-    }
-    fs.delete(tmp, true)
-  }
-
-  /** Commit metadata log (rows inserted/updated/deleted per commit —
-    * core/hudi_engine.py:246-274 parity).
-    */
-  def commitDetails(spark: SparkSession, root: String): DataFrame =
-    spark.read.json(commitsPath(root))
 }

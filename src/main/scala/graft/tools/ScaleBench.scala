@@ -621,25 +621,31 @@ object ScaleBench {
       // sublinear in wall), not commit-bound.
       "lake_bulk_orders" -> (lakeBulkOrders _))
 
+  /** The lake root lives beside `dir` (same device as the data) and is
+    * deleted before the rep returns, so the aggregate is collected here.
+    */
   private def lakeBulkOrders(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_scale_lake")
-      .toString
-    val orders = s.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderdate").cast("string").as("o_orderdate"))
-    val fgrp = graft.model.FeatureGroup("scale_orders", 1,
-      primaryKey = Seq("o_orderkey"),
-      features = Seq(
-        graft.model.Feature("o_orderkey", org.apache.spark.sql.types.LongType),
-        graft.model.Feature("o_custkey", org.apache.spark.sql.types.LongType),
-        graft.model.Feature("o_totalprice",
-          org.apache.spark.sql.types.DoubleType),
-        graft.model.Feature("o_orderdate",
-          org.apache.spark.sql.types.StringType)))
-    graft.sources.Lake.create(s, root, fgrp, orders)
-    graft.sources.Lake.snapshot(s, root, fgrp, asOf = None)
-      .groupBy().agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice")).as("s"))
+    val root = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.Bench.writableSibling(dir)), "graft_scale_lake")
+    try {
+      val orders = s.read.parquet(s"$dir/orders.parquet")
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+          col("o_orderdate").cast("string").as("o_orderdate"))
+      val fgrp = graft.model.FeatureGroup("scale_orders", 1,
+        primaryKey = Seq("o_orderkey"),
+        features = Seq(
+          graft.model.Feature("o_orderkey", org.apache.spark.sql.types.LongType),
+          graft.model.Feature("o_custkey", org.apache.spark.sql.types.LongType),
+          graft.model.Feature("o_totalprice",
+            org.apache.spark.sql.types.DoubleType),
+          graft.model.Feature("o_orderdate",
+            org.apache.spark.sql.types.StringType)))
+      graft.sources.Lake.create(s, root.toString, fgrp, orders)
+      val agg = graft.sources.Lake.snapshot(s, root.toString, fgrp, asOf = None)
+        .groupBy().agg(count(lit(1)).as("n"),
+          sum(col("o_totalprice")).as("s"))
+      s.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
+    } finally graft.Bench.deleteRecursively(root)
   }
 
   def main(args: Array[String]): Unit = args match {

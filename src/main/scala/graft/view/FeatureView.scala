@@ -83,9 +83,6 @@ final case class FeatureView(
     }
   }
 
-  def labelSplit(df: DataFrame): (DataFrame, DataFrame) =
-    Splits.splitLabels(df, labels)
-
   def dropHelperColumns(df: DataFrame, forInference: Boolean): DataFrame = {
     val drop = if (forInference) inferenceHelperColumns else trainingHelperColumns
     df.drop(drop: _*)

@@ -87,8 +87,8 @@ class DeltaLiteSpec extends SparkSpec {
       DeltaLite.append(Seq((i + 1L, s"r$i")).toDF("id", "v").coalesce(1), t)
     }
     // commits v0..v29 → auto-checkpoints at v10 and v20, pointer at 20
-    assert(DeltaLite.checkpointVersions(t) == Seq(10L, 20L))
-    assert(DeltaLite.lastCheckpoint(t).contains(20L))
+    assert(DeltaLite.checkpointVersions(spark, t) == Seq(10L, 20L))
+    assert(DeltaLite.lastCheckpoint(spark, t).contains(20L))
     // corrupt every commit file the checkpoint supersedes — if any read
     // below touches them, jackson throws; a clean pass PROVES replay is
     // checkpoint + tail only
@@ -112,7 +112,7 @@ class DeltaLiteSpec extends SparkSpec {
     (1 to 24).foreach { i =>
       DeltaLite.append(Seq((i + 1L, s"r$i")).toDF("id", "v").coalesce(1), t)
     }
-    assert(DeltaLite.lastCheckpoint(t).contains(20L))
+    assert(DeltaLite.lastCheckpoint(spark, t).contains(20L))
     // corrupt v0..v10: asOf=15 must seed from checkpoint 10 (directory
     // listing, since the pointer at 20 is ahead) + JSON tail 11..15
     (0L to 10L).foreach { v =>
@@ -177,11 +177,11 @@ class DeltaLiteSpec extends SparkSpec {
     val t = tmp()
     DeltaLite.create(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
     // both writers observed head v0 and target v1
-    val winner = DeltaLite.tryPublish(t, 1L, Seq("""{"commitInfo":{}}"""))
-    val loser = DeltaLite.tryPublish(t, 1L, Seq("""{"commitInfo":{}}"""))
+    val winner = DeltaLite.tryPublish(spark, t, 1L, Seq("""{"commitInfo":{}}"""))
+    val loser = DeltaLite.tryPublish(spark, t, 1L, Seq("""{"commitInfo":{}}"""))
     assert(winner && !loser, "exactly one writer may own a version file")
     // a concurrent create is the same race on v0 — always lost here
-    assert(!DeltaLite.tryPublish(t, 0L, Seq("""{"commitInfo":{}}""")))
+    assert(!DeltaLite.tryPublish(spark, t, 0L, Seq("""{"commitInfo":{}}""")))
     // the losing APPEND path rebases: lands at v2, data intact
     val v = DeltaLite.append(Seq((3L, "c")).toDF("id", "v"), t)
     assert(v == 2L)
@@ -209,8 +209,8 @@ class DeltaLiteSpec extends SparkSpec {
       scala.concurrent.duration.Duration("120s"))
     pool.shutdown()
     assert(committed.toSet.size == 12, "every append owns its own version")
-    assert(DeltaLite.versions(t) == (0L to 12L),
-      s"contiguous log, got ${DeltaLite.versions(t)}")
+    assert(DeltaLite.versions(spark, t) == (0L to 12L),
+      s"contiguous log, got ${DeltaLite.versions(spark, t)}")
     assert(DeltaLite.snapshot(spark, t).orderBy("id")
       .collect().map(_.getLong(0)).toSeq == (0L to 12L),
       "no append may be lost to the race")
@@ -293,8 +293,8 @@ class DeltaLiteSpec extends SparkSpec {
     assert(allVersions.size == 2 * nPerWriter &&
       allVersions.toSet.size == 2 * nPerWriter,
       s"every commit must own its own version: $outs")
-    assert(DeltaLite.versions(t) == (0L to (2L * nPerWriter)),
-      s"contiguous log, got ${DeltaLite.versions(t)}")
+    assert(DeltaLite.versions(spark, t) == (0L to (2L * nPerWriter)),
+      s"contiguous log, got ${DeltaLite.versions(spark, t)}")
     val ids = DeltaLite.snapshot(spark, t)
       .collect().map(_.getLong(0)).toSet
     val expected = Set(0L) ++
@@ -349,4 +349,43 @@ class DeltaLiteSpec extends SparkSpec {
     // the writer finished all 6 appends; a final read sees them all
     assert(DeltaLite.snapshot(spark, t).count() == 7L)
   }
+
+  test("DeltaLite and Lake tables resolve their filesystem from the " +
+    "session's Hadoop conf") {
+    // a scheme registered ONLY in the session's conf, uncached, so a
+    // filesystem resolved from any other Configuration cannot find it
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftsession.impl", classOf[SessionOnlyFs].getName)
+    hc.setBoolean("fs.graftsession.impl.disable.cache", true)
+    try {
+      val base = "graftsession:" + java.nio.file.Files
+        .createTempDirectory("graft_session_fs").toString
+      val t = s"$base/delta"
+      DeltaLite.create(Seq((1L, "a")).toDF("id", "v"), t)
+      DeltaLite.append(Seq((2L, "b")).toDF("id", "v"), t)
+      assert(DeltaLite.snapshot(spark, t).select("id").collect()
+        .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+
+      val fg = graft.model.FeatureGroup("s", primaryKey = Seq("id"),
+        features = Seq(
+          graft.model.Feature("id", org.apache.spark.sql.types.LongType),
+          graft.model.Feature("v", org.apache.spark.sql.types.StringType)))
+      val lake = s"$base/lake"
+      graft.sources.Lake.create(spark, lake, fg, Seq((1L, "a")).toDF("id", "v"))
+      graft.sources.Lake.upsert(spark, lake, fg, Seq((1L, "a2"), (2L, "b")).toDF("id", "v"))
+      assert(graft.sources.Lake.snapshot(spark, lake, fg, None).orderBy("id")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((1L, "a2"), (2L, "b")))
+      assert(graft.sources.Lake.listCommits(spark, lake).size == 2)
+    } finally {
+      hc.unset("fs.graftsession.impl")
+      hc.unset("fs.graftsession.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under a scheme of its own (`graftsession:`). */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
+  override def getScheme: String = "graftsession"
 }

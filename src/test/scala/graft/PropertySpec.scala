@@ -121,11 +121,13 @@ class PropertySpec extends SparkSpec {
 
   test("property: lake state machine matches an in-memory model") {
     import graft.sources.Lake
-    val opsGen = Gen.listOfN(5, for {
-      del <- Gen.oneOf(false, false, true) // deletes less frequent
+    // steps: upsert / delete keys, compact, cleanCommits(keepLast)
+    val opsGen = Gen.listOfN(6, for {
+      kind <- Gen.frequency(4 -> "upsert", 2 -> "delete", 1 -> "compact", 1 -> "clean")
       keys <- Gen.nonEmptyListOf(Gen.choose(0L, 6L)).map(_.distinct.take(4))
       tag <- Gen.choose(0, 999)
-    } yield (del, keys, tag))
+      keep <- Gen.choose(1, 3)
+    } yield (kind, keys, tag, keep))
 
     forSamples(opsGen, n = 5) { ops =>
       val fs = new graft.catalog.FeatureStore(spark, warehouseDir =
@@ -134,19 +136,44 @@ class PropertySpec extends SparkSpec {
       val fg = fs.createFeatureGroup("m", init, primaryKey = Seq("id"))
       val root = fg.source.asInstanceOf[graft.model.LakeSource].root
 
+      // the model keeps history only from the horizon: the listed
+      // timeline, and the state after every commit
       var model = Map(0L -> "init0", 1L -> "init1")
-      var history = List(Lake.listCommits(spark, root).last -> model)
+      var timeline = Lake.listCommits(spark, root).toVector
+      var history = List(timeline.last -> model)
+      var horizon = Option.empty[Long]
+      def stateAt(t: Long) = history.find(_._1 <= t).get._2
 
-      ops.foreach { case (del, keys, tag) =>
-        if (del) {
-          fs.delete(fg, keys.toDF("id"))
-          model = model -- keys
-        } else {
-          val rows = keys.map(k => (k, s"v$tag-$k"))
-          fs.insert(fg, rows.toDF("id", "v"))
-          model = model ++ rows.map { case (k, v) => k -> v }
+      ops.foreach { case (kind, keys, tag, keep) =>
+        kind match {
+          case "upsert" =>
+            val rows = keys.map(k => (k, s"v$tag-$k"))
+            val t = fs.insert(fg, rows.toDF("id", "v")).commitTime
+            model = model ++ rows.map { case (k, v) => k -> v }
+            timeline :+= t
+            history ::= t -> model
+          case "delete" =>
+            val t = fs.delete(fg, keys.toDF("id")).commitTime
+            // a delete of no live key writes no tombstone files
+            if (keys.exists(model.contains)) timeline :+= t
+            model = model -- keys
+            history ::= t -> model
+          case "compact" =>
+            val t = Lake.compact(spark, root, fg).commitTime
+            timeline = if (model.isEmpty) Vector.empty else Vector(t)
+            horizon = Some(t)
+            history ::= t -> model
+          case "clean" =>
+            if (timeline.size > keep) {
+              val baseT = timeline(timeline.size - keep - 1)
+              timeline = timeline.takeRight(keep)
+              if (stateAt(baseT).nonEmpty) timeline = baseT +: timeline
+              horizon = Some(baseT)
+            }
+            assert(Lake.cleanCommits(spark, root, fg, keep) === timeline)
         }
-        history ::= Lake.listCommits(spark, root).last -> model
+        assert(Lake.listCommits(spark, root) === timeline, s"after $kind")
+        assert(Lake.commitHorizon(spark, root) === horizon, s"after $kind")
       }
 
       // final snapshot matches the model
@@ -154,11 +181,16 @@ class PropertySpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(got === model)
 
-      // as-of every commit reproduces each historical state
+      // as-of every commit at or after the horizon reproduces its state;
+      // before the horizon it fails fast
       history.foreach { case (t, m) =>
-        val at = Lake.snapshot(spark, root, fg, Some(t)).collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap
-        assert(at === m, s"as-of $t")
+        if (horizon.forall(t >= _)) {
+          val at = Lake.snapshot(spark, root, fg, Some(t)).collect()
+            .map(r => r.getLong(0) -> r.getString(1)).toMap
+          assert(at === m, s"as-of $t")
+        } else intercept[IllegalArgumentException] {
+          Lake.snapshot(spark, root, fg, Some(t))
+        }
       }
     }
   }
