@@ -88,11 +88,16 @@ object GraftExtensions {
       "graft_redact_pii(text) - mask emails, IPv4s and phone numbers",
       one("graft_redact_pii", TextAnalysis.redactPii)))
 
-  /** Register the same functions on an already-built session. */
+  /** Register the same functions on an already-built session. Names the
+    * session already resolves (an earlier call, or the extension) are
+    * skipped: re-registering replaces the function and logs a WARN each
+    * time, once per function for every store built on the session.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
 }

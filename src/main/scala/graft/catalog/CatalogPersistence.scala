@@ -1,17 +1,16 @@
 package graft.catalog
 
+import graft.catalog.JsonFields._
 import graft.model._
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.DataType
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 
-/** JSON persistence for feature-group definitions — one file per group
-  * under `warehouseDir/_catalog/<name>_<version>.json`, accessed through
-  * the Hadoop FileSystem so the catalog lives wherever the warehouse does
-  * (reference durability contract: server-side metadata,
+/** JSON codec for feature-group definitions — one [[DocumentStore]]
+  * document per group, `warehouseDir/_catalog/<name>_<version>.json`, so
+  * the catalog lives wherever the warehouse does (reference durability
+  * contract: server-side metadata,
   * python/hsfs/feature_store.py; the lake data already survives restarts,
   * this makes the definitions survive too).
   *
@@ -20,22 +19,7 @@ import org.json4s.jackson.JsonMethods
   */
 object CatalogPersistence {
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_catalog"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def defaultToJson(v: Any): JValue = v match {
-    case s: String  => JString(s)
-    case i: Int     => JInt(i)
-    case l: Long    => JInt(l)
-    case d: Double  => JDouble(d)
-    case f: Float   => JDouble(f.toDouble)
-    case b: Boolean => JBool(b)
-    case other      => JString(other.toString)
-  }
+  private val Kind = "catalog"
 
   /** Coerce a parsed JSON default back to the feature's declared type so
     * write-path fills (`lit(default)`) stay type-correct after a reload.
@@ -71,22 +55,16 @@ object CatalogPersistence {
   }
 
   private def sourceFromJson(j: JValue): FgSource = {
-    val path = (j \ "path") match { case JString(s) => s; case _ => "" }
-    def strMap(v: JValue): Map[String, String] = v match {
-      case JObject(fields) =>
-        fields.collect { case JField(k, JString(s)) => k -> s }.toMap
-      case _ => Map.empty
-    }
+    val path = str(j \ "path").getOrElse("")
     (j \ "type") match {
       case JString("parquet") => ParquetSource(path)
       case JString("lake")    => LakeSource(path)
       case JString("view")    => ViewSource(path)
       case JString("connector") => ConnectorSource(
-        format = (j \ "format") match { case JString(s) => s; case _ => "" },
+        format = str(j \ "format").getOrElse(""),
         options = strMap(j \ "options"),
         hadoopConf = strMap(j \ "hadoopConf"),
-        path = (j \ "loadPath") match {
-          case JString(s) => Some(s); case _ => None })
+        path = str(j \ "loadPath"))
       case _                  => UnboundSource
     }
   }
@@ -114,26 +92,20 @@ object CatalogPersistence {
             ("partition" -> f.partition) ~
             ("nullable" -> f.nullable) ~
             ("description" -> f.description) ~
-            ("default" -> f.defaultValue.map(defaultToJson))
+            ("default" -> f.defaultValue.map(valueJson))
         })
     }
 
   private[catalog] def fromJson(j: JValue): FeatureGroup = {
-    def str(v: JValue): Option[String] =
-      v match { case JString(s) => Some(s); case _ => None }
-    def strs(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.flatMap(str); case _ => Nil }
-    def bool(v: JValue, dflt: Boolean): Boolean =
-      v match { case JBool(b) => b; case _ => dflt }
     val features = (j \ "features") match {
       case JArray(fs) => fs.map { f =>
         val dt = DataType.fromJson(str(f \ "dataType").getOrElse("\"string\""))
         Feature(
           name = str(f \ "name").getOrElse(""),
           dataType = dt,
-          primary = bool(f \ "primary", dflt = false),
-          partition = bool(f \ "partition", dflt = false),
-          nullable = bool(f \ "nullable", dflt = true),
+          primary = bool(f \ "primary").getOrElse(false),
+          partition = bool(f \ "partition").getOrElse(false),
+          nullable = bool(f \ "nullable").getOrElse(true),
           description = str(f \ "description"),
           defaultValue = defaultFromJson(f \ "default", dt))
       }
@@ -141,45 +113,29 @@ object CatalogPersistence {
     }
     FeatureGroup(
       name = str(j \ "name").getOrElse(""),
-      version = (j \ "version") match { case JInt(i) => i.toInt; case _ => 1 },
+      version = lng(j \ "version").fold(1)(_.toInt),
       features = features,
       primaryKey = strs(j \ "primaryKey"),
       partitionKey = strs(j \ "partitionKey"),
       eventTime = str(j \ "eventTime"),
       precombineKey = str(j \ "precombineKey"),
       source = sourceFromJson(j \ "source"),
-      online = bool(j \ "online", dflt = false),
+      online = bool(j \ "online").getOrElse(false),
       // absent in pre-upgrade catalogs → reference defaults
       statisticsConfig = StatisticsConfig(
-        enabled = bool(j \ "statisticsConfig" \ "enabled", dflt = true),
-        correlations = bool(j \ "statisticsConfig" \ "correlations", dflt = false),
-        histograms = bool(j \ "statisticsConfig" \ "histograms", dflt = false),
+        enabled = bool(j \ "statisticsConfig" \ "enabled").getOrElse(true),
+        correlations =
+          bool(j \ "statisticsConfig" \ "correlations").getOrElse(false),
+        histograms =
+          bool(j \ "statisticsConfig" \ "histograms").getOrElse(false),
         exactUniqueness =
-          bool(j \ "statisticsConfig" \ "exactUniqueness", dflt = false),
+          bool(j \ "statisticsConfig" \ "exactUniqueness").getOrElse(false),
         columns = strs(j \ "statisticsConfig" \ "columns")))
   }
 
-  def save(spark: SparkSession, warehouseDir: String, fg: FeatureGroup): Unit =
-    toJson(fg).foreach { j =>
-      val (fs, _) = fsOf(spark, dir(warehouseDir))
-      val out = fs.create(new Path(s"${dir(warehouseDir)}/${fg.id}.json"), true)
-      try out.write(JsonMethods.compact(JsonMethods.render(j))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+  def save(docs: DocumentStore, fg: FeatureGroup): Unit =
+    toJson(fg).foreach(docs.put(Kind, fg.id, _))
 
-  def load(spark: SparkSession, warehouseDir: String): Seq[FeatureGroup] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val txt =
-          try new String(in.readAllBytes,
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        fromJson(JsonMethods.parse(txt))
-      }
-  }
+  def load(docs: DocumentStore): Seq[FeatureGroup] =
+    docs.ids(Kind).flatMap(docs.get(Kind, _)).map(fromJson)
 }

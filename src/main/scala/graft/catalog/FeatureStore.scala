@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with a local registry; `warehouseDir` is the root for lake-backed groups.
   *
   * Definitions PERSIST: every registered group (except ephemeral
-  * DataFrame-backed spines) is written as JSON under
-  * `warehouseDir/_catalog/` via the Hadoop FileSystem and reloaded on
+  * DataFrame-backed spines) is published as a JSON document under
+  * `warehouseDir/_catalog/` through the [[DocumentStore]] and reloaded on
   * construction, so a new session over the same warehouse sees every
   * group — the durability the reference gets from its server-side
   * metadata (python/hsfs/feature_store.py).
@@ -45,13 +45,15 @@ final class FeatureStore(
   // SQL surface: register them so `fs.sql` resolves them out of the box
   graft.GraftExtensions.register(spark)
 
-  CatalogPersistence.load(spark, warehouseDir).foreach { fg =>
+  private val docs = new DocumentStore(spark, warehouseDir)
+
+  CatalogPersistence.load(docs).foreach { fg =>
     registry.put((fg.name, fg.version), fg)
   }
 
   def register(fg: FeatureGroup): FeatureGroup = {
     registry.put((fg.name, fg.version), fg)
-    CatalogPersistence.save(spark, warehouseDir, fg)
+    CatalogPersistence.save(docs, fg)
     fg
   }
 
@@ -176,13 +178,13 @@ final class FeatureStore(
     */
   def saveExpectationSuite(fg: FeatureGroup,
                            suite: graft.ops.Validation.SuiteDef): Unit =
-    SuitePersistence.save(spark, warehouseDir, fg.id, suite)
+    SuitePersistence.save(docs, fg.id, suite)
 
   def getExpectationSuite(fg: FeatureGroup): Option[graft.ops.Validation.SuiteDef] =
-    SuitePersistence.load(spark, warehouseDir, fg.id)
+    SuitePersistence.load(docs, fg.id)
 
   def deleteExpectationSuite(fg: FeatureGroup): Unit =
-    SuitePersistence.delete(spark, warehouseDir, fg.id)
+    SuitePersistence.delete(docs, fg.id)
 
   // -- validation report history -------------------------------------------
 
@@ -459,7 +461,7 @@ final class FeatureStore(
     * transformations are stored by name (see [[ViewPersistence]]).
     */
   def saveFeatureView(view: graft.view.FeatureView): Unit =
-    ViewPersistence.save(spark, warehouseDir, view)
+    ViewPersistence.save(docs, view)
 
   /** Load a persisted view. Transformations resolve from the caller's
     * registry first, then from the PERSISTED builtin registry
@@ -470,19 +472,18 @@ final class FeatureStore(
                      transformationRegistry:
                        Map[String, graft.ops.Transformations.Transformation]
                        = Map()): graft.view.FeatureView = {
-    // ONE read of the view file; names missing from the caller's registry
+    // ONE read of the view document; names missing from the caller's registry
     // resolve lazily from the persisted transformation store — never a
     // load of every registered transformation
-    ViewPersistence.load(spark, warehouseDir, name, version,
-        transformationRegistry,
-        resolve = n => TransformPersistence.load(spark, warehouseDir, n)
+    ViewPersistence.load(docs, name, version, transformationRegistry,
+        resolve = n => TransformPersistence.load(docs, n)
           .map(_.toTransformation))
       .getOrElse(throw new NoSuchElementException(
         s"feature view $name v$version"))
   }
 
   def deleteFeatureView(name: String, version: Int = 1): Unit =
-    ViewPersistence.delete(spark, warehouseDir, name, version)
+    ViewPersistence.delete(docs, name, version)
 
   /** Load the persisted view if present, else persist and return this one
     * (feature_view.py get_or_create_feature_view).
@@ -512,22 +513,22 @@ final class FeatureStore(
     val d = TransformPersistence.TransformDef(name, builtin, input,
       outName, dropInput)
     val t = d.toTransformation // validates the builtin kind up front
-    TransformPersistence.save(spark, warehouseDir, d)
+    TransformPersistence.save(docs, d)
     t
   }
 
   def getTransformationFunction(name: String)
       : graft.ops.Transformations.Transformation =
-    TransformPersistence.load(spark, warehouseDir, name)
+    TransformPersistence.load(docs, name)
       .map(_.toTransformation)
       .getOrElse(throw new NoSuchElementException(
         s"transformation function $name"))
 
   def transformationFunctions: Seq[String] =
-    TransformPersistence.list(spark, warehouseDir)
+    TransformPersistence.list(docs)
 
   def deleteTransformationFunction(name: String): Unit =
-    TransformPersistence.delete(spark, warehouseDir, name)
+    TransformPersistence.delete(docs, name)
 
   /** Persist a training run's fitted transformation statistics for a
     * view; a serving session loads them to scale/encode online vectors
@@ -537,7 +538,7 @@ final class FeatureStore(
       viewName: String, version: Int,
       stats: Map[String, graft.ops.Transformations.FeatureStatistics],
       trainingDatasetVersion: Option[Int] = None): Unit =
-    StatsPersistence.save(spark, warehouseDir, viewName, version, stats,
+    StatsPersistence.save(docs, viewName, version, stats,
       trainingDatasetVersion)
 
   /** Fitted statistics to serve with — per training-dataset version when
@@ -548,9 +549,8 @@ final class FeatureStore(
                             trainingDatasetVersion: Option[Int] = None)
       : Option[Map[String, graft.ops.Transformations.FeatureStatistics]] =
     trainingDatasetVersion
-      .flatMap(td => StatsPersistence.load(spark, warehouseDir, viewName,
-        version, Some(td)))
-      .orElse(StatsPersistence.load(spark, warehouseDir, viewName, version))
+      .flatMap(td => StatsPersistence.load(docs, viewName, version, Some(td)))
+      .orElse(StatsPersistence.load(docs, viewName, version, None))
 
   // -- training datasets (materialized, versioned) -------------------------
 
@@ -588,15 +588,14 @@ final class FeatureStore(
       randomWeights, timeBounds, seed, exactSizes,
       createdMillis = System.currentTimeMillis(),
       groupSplit = groupSplit, coalesce = coalesce)
-    TrainingDatasetPersistence.save(spark, warehouseDir, meta)
+    TrainingDatasetPersistence.save(docs, meta)
     meta
   }
 
   def getTrainingDataset(viewName: String, viewVersion: Int = 1,
                          version: Int = 1)
       : TrainingDatasetPersistence.TrainingDatasetMeta =
-    TrainingDatasetPersistence
-      .load(spark, warehouseDir, viewName, viewVersion, version)
+    TrainingDatasetPersistence.load(docs, viewName, viewVersion, version)
       .getOrElse(throw new NoSuchElementException(
         s"training dataset $viewName v$viewVersion td$version"))
 
@@ -639,24 +638,23 @@ final class FeatureStore(
       saveTrainingStatistics(viewName, viewVersion,
         res.transformationStatistics, Some(version))
     val updated = meta.copy(createdMillis = System.currentTimeMillis())
-    TrainingDatasetPersistence.save(spark, warehouseDir, updated)
+    TrainingDatasetPersistence.save(docs, updated)
     updated
   }
 
   /** Persisted training-dataset versions of a view, ascending. */
   def trainingDatasets(viewName: String, viewVersion: Int = 1): Seq[Int] =
-    TrainingDatasetPersistence.list(spark, warehouseDir, viewName, viewVersion)
+    TrainingDatasetPersistence.list(docs, viewName, viewVersion)
 
   /** Drop a version: descriptor + materialized files. */
   def deleteTrainingDataset(viewName: String, viewVersion: Int = 1,
                             version: Int = 1): Unit = {
-    TrainingDatasetPersistence.load(spark, warehouseDir, viewName,
-        viewVersion, version).foreach { meta =>
+    TrainingDatasetPersistence.load(docs, viewName, viewVersion, version)
+        .foreach { meta =>
       val p = new org.apache.hadoop.fs.Path(meta.path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-    TrainingDatasetPersistence.delete(spark, warehouseDir, viewName,
-      viewVersion, version)
+    TrainingDatasetPersistence.delete(docs, viewName, viewVersion, version)
   }
 
   // -- tags / keywords / provenance (persisted metadata surface) -----------
@@ -669,34 +667,33 @@ final class FeatureStore(
     * analog of fg.add_tag (python/hsfs/feature_group.py tag APIs).
     */
   def addTag(fg: FeatureGroup, name: String, value: String): Unit = {
-    val cur = TagPersistence.load(spark, warehouseDir, entityId(fg))
-    TagPersistence.save(spark, warehouseDir, entityId(fg),
+    val cur = TagPersistence.load(docs, entityId(fg))
+    TagPersistence.save(docs, entityId(fg),
       cur.copy(tags = cur.tags + (name -> value)))
   }
   def getTags(fg: FeatureGroup): Map[String, String] =
-    TagPersistence.load(spark, warehouseDir, entityId(fg)).tags
+    TagPersistence.load(docs, entityId(fg)).tags
   def deleteTag(fg: FeatureGroup, name: String): Unit = {
-    val cur = TagPersistence.load(spark, warehouseDir, entityId(fg))
-    TagPersistence.save(spark, warehouseDir, entityId(fg),
+    val cur = TagPersistence.load(docs, entityId(fg))
+    TagPersistence.save(docs, entityId(fg),
       cur.copy(tags = cur.tags - name))
   }
   def addKeywords(fg: FeatureGroup, kws: Seq[String]): Unit = {
-    val cur = TagPersistence.load(spark, warehouseDir, entityId(fg))
-    TagPersistence.save(spark, warehouseDir, entityId(fg),
+    val cur = TagPersistence.load(docs, entityId(fg))
+    TagPersistence.save(docs, entityId(fg),
       cur.copy(keywords = (cur.keywords ++ kws).distinct))
   }
   def getKeywords(fg: FeatureGroup): Seq[String] =
-    TagPersistence.load(spark, warehouseDir, entityId(fg)).keywords
+    TagPersistence.load(docs, entityId(fg)).keywords
 
   def addTag(view: graft.view.FeatureView, name: String, value: String): Unit = {
     val id = entityId(view.name, view.version)
-    val cur = TagPersistence.load(spark, warehouseDir, id)
-    TagPersistence.save(spark, warehouseDir, id,
+    val cur = TagPersistence.load(docs, id)
+    TagPersistence.save(docs, id,
       cur.copy(tags = cur.tags + (name -> value)))
   }
   def getTags(view: graft.view.FeatureView): Map[String, String] =
-    TagPersistence.load(spark, warehouseDir,
-      entityId(view.name, view.version)).tags
+    TagPersistence.load(docs, entityId(view.name, view.version)).tags
 
   /** Registered groups carrying tag `name` (optionally a specific value). */
   def findGroupsByTag(name: String,
@@ -721,8 +718,8 @@ final class FeatureStore(
     * registries.
     */
   def dependentViews(fg: FeatureGroup): Seq[(String, Int)] =
-    ViewPersistence.list(spark, warehouseDir).filter { case (n, v) =>
-      Provenance.referencedGroups(spark, warehouseDir, n, v)
+    ViewPersistence.list(docs).filter { case (n, v) =>
+      Provenance.referencedGroups(docs, n, v)
         .contains((fg.name, fg.version))
     }.sorted
 

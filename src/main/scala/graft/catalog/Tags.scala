@@ -1,21 +1,19 @@
 package graft.catalog
 
+import graft.catalog.JsonFields._
 import graft.ir.Query
-import graft.model.FeatureGroup
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Tags, keywords, and query-derived provenance — the metadata surface of
   * the reference's tag/keyword/provenance APIs
   * (python/hsfs/feature_group.py add_tag/get_tags/keywords,
   * python/hsfs/core/explicit_provenance.py) re-expressed for the
-  * in-process catalog: tags and keywords persist as one JSON file per
-  * entity under `warehouseDir/_tags/`, and provenance DERIVES from the
-  * persisted query IR instead of a server-side lineage graph — a feature
-  * view's upstream links are a pure function of its query.
+  * in-process catalog: tags and keywords persist as one [[DocumentStore]]
+  * document per entity under `warehouseDir/_tags/`, and provenance
+  * DERIVES from the persisted query IR instead of a server-side lineage
+  * graph — a feature view's upstream links are a pure function of its
+  * query.
   */
 object TagPersistence {
 
@@ -26,61 +24,15 @@ object TagPersistence {
   final case class Tags(tags: Map[String, String] = Map(),
                         keywords: Seq[String] = Nil)
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_tags"
+  private val Kind = "tags"
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  def save(docs: DocumentStore, entityId: String, t: Tags): Unit =
+    docs.put(Kind, entityId, ("tags" -> t.tags) ~ ("keywords" -> t.keywords))
 
-  def save(spark: SparkSession, warehouseDir: String, entityId: String,
-           t: Tags): Unit = {
-    val j: JValue = ("tags" -> t.tags) ~ ("keywords" -> t.keywords)
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/$entityId.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def load(spark: SparkSession, warehouseDir: String,
-           entityId: String): Tags = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/$entityId.json")
-    if (!fs.exists(p)) Tags()
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      Tags(
-        tags = (j \ "tags") match {
-          case JObject(fields) =>
-            fields.collect { case JField(k, JString(v)) => k -> v }.toMap
-          case _ => Map.empty
-        },
-        keywords = (j \ "keywords") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        })
+  def load(docs: DocumentStore, entityId: String): Tags =
+    docs.get(Kind, entityId).fold(Tags()) { j =>
+      Tags(tags = strMap(j \ "tags"), keywords = strs(j \ "keywords"))
     }
-  }
-
-  /** Every entity id with persisted tag state. */
-  def list(spark: SparkSession, warehouseDir: String): Seq[String] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
-  }
-
-  def delete(spark: SparkSession, warehouseDir: String,
-             entityId: String): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(s"${dir(warehouseDir)}/$entityId.json"), false)
-    ()
-  }
 }
 
 /** Provenance derived from query IR (core/explicit_provenance.py Links,
@@ -117,9 +69,9 @@ object Provenance {
     * reverse edge (`dependentViews`) scans these without needing the
     * view's transformation registry.
     */
-  def referencedGroups(spark: SparkSession, warehouseDir: String,
-                       viewName: String, version: Int): Seq[(String, Int)] = {
-    ViewPersistence.loadQueryRaw(spark, warehouseDir, viewName, version)
+  def referencedGroups(docs: DocumentStore, viewName: String,
+                       version: Int): Seq[(String, Int)] = {
+    ViewPersistence.loadQueryRaw(docs, viewName, version)
       .map(q => links(q).map(l => (l.groupName, l.groupVersion)))
       .getOrElse(Nil)
   }

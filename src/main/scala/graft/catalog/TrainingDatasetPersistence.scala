@@ -1,18 +1,16 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import graft.catalog.JsonFields._
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Training-dataset VERSION metadata CRUD, persisted as JSON under
   * `warehouseDir/_training_datasets/<view>_<viewVersion>_<tdVersion>.json`
   * — the reference materializes versioned training datasets with
   * server-side metadata (python/hsfs/training_dataset.py,
   * core/feature_view_engine.py:229-320 create_training_dataset); here the
-  * descriptor is one JSON file next to the split files, so a restarted
-  * session can locate and read the exact materialized artifact.
+  * descriptor is one [[DocumentStore]] document, so a restarted session
+  * can locate and read the exact materialized artifact.
   */
 object TrainingDatasetPersistence {
 
@@ -37,124 +35,81 @@ object TrainingDatasetPersistence {
       else Seq("train")
   }
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_training_datasets"
-  private def fileId(view: String, viewVersion: Int, version: Int) =
+  private val Kind = "training_datasets"
+  private def idOf(view: String, viewVersion: Int, version: Int) =
     s"${view}_${viewVersion}_$version"
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  def save(docs: DocumentStore, meta: TrainingDatasetMeta): Unit =
+    docs.put(Kind, idOf(meta.viewName, meta.viewVersion, meta.version),
+      ("viewName" -> meta.viewName) ~
+        ("viewVersion" -> meta.viewVersion) ~
+        ("version" -> meta.version) ~
+        ("format" -> meta.format) ~
+        ("path" -> meta.path) ~
+        ("randomWeights" -> meta.randomWeights) ~
+        ("timeBounds" -> meta.timeBounds.map { case (k, (lo, hi)) =>
+          k -> List(lo, hi) }) ~
+        ("seed" -> meta.seed) ~
+        ("exactSizes" -> meta.exactSizes) ~
+        ("coalesce" -> meta.coalesce) ~
+        ("createdMillis" -> meta.createdMillis) ~
+        ("groupSplit" -> meta.groupSplit.map(g =>
+          ("groupCol" -> g.groupCol) ~
+            ("salt" -> g.salt) ~
+            ("weights" -> g.weights.map { case (k, w) =>
+              ("name" -> k) ~ ("w" -> w): JValue }))))
 
-  def save(spark: SparkSession, warehouseDir: String,
-           meta: TrainingDatasetMeta): Unit = {
-    val j: JValue = ("viewName" -> meta.viewName) ~
-      ("viewVersion" -> meta.viewVersion) ~
-      ("version" -> meta.version) ~
-      ("format" -> meta.format) ~
-      ("path" -> meta.path) ~
-      ("randomWeights" -> meta.randomWeights) ~
-      ("timeBounds" -> meta.timeBounds.map { case (k, (lo, hi)) =>
-        k -> List(lo, hi) }) ~
-      ("seed" -> meta.seed) ~
-      ("exactSizes" -> meta.exactSizes) ~
-      ("coalesce" -> meta.coalesce) ~
-      ("createdMillis" -> meta.createdMillis) ~
-      ("groupSplit" -> meta.groupSplit.map(g =>
-        ("groupCol" -> g.groupCol) ~
-          ("salt" -> g.salt) ~
-          ("weights" -> g.weights.map { case (k, w) =>
-            ("name" -> k) ~ ("w" -> w): JValue })))
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/${fileId(
-      meta.viewName, meta.viewVersion, meta.version)}.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def load(spark: SparkSession, warehouseDir: String, viewName: String,
-           viewVersion: Int, version: Int): Option[TrainingDatasetMeta] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(
-      s"${dir(warehouseDir)}/${fileId(viewName, viewVersion, version)}.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      def str(v: JValue) = v match { case JString(s) => s; case _ => "" }
-      def num(v: JValue): Long = v match {
-        case JInt(i) => i.toLong; case JLong(l) => l
-        case JDouble(d) => d.toLong; case _ => 0L }
-      Some(TrainingDatasetMeta(
-        viewName = str(j \ "viewName"),
-        viewVersion = num(j \ "viewVersion").toInt,
-        version = num(j \ "version").toInt,
-        format = str(j \ "format"),
-        path = str(j \ "path"),
+  def load(docs: DocumentStore, viewName: String, viewVersion: Int,
+           version: Int): Option[TrainingDatasetMeta] =
+    docs.get(Kind, idOf(viewName, viewVersion, version)).map { j =>
+      TrainingDatasetMeta(
+        viewName = str(j \ "viewName").getOrElse(""),
+        viewVersion = lng(j \ "viewVersion").getOrElse(0L).toInt,
+        version = lng(j \ "version").getOrElse(0L).toInt,
+        format = str(j \ "format").getOrElse(""),
+        path = str(j \ "path").getOrElse(""),
         randomWeights = (j \ "randomWeights") match {
-          case JObject(fields) => fields.collect {
-            case JField(k, JDouble(d)) => k -> d
-            case JField(k, JInt(i)) => k -> i.toDouble
-          }.toMap
+          case JObject(fields) => fields.flatMap { case (k, w) =>
+            dbl(w).map(k -> _) }.toMap
           case _ => Map.empty
         },
         timeBounds = (j \ "timeBounds") match {
           case JObject(fields) => fields.collect {
-            case JField(k, JArray(List(lo, hi))) => k -> (num(lo), num(hi))
+            case JField(k, JArray(List(lo, hi))) =>
+              k -> (lng(lo).getOrElse(0L), lng(hi).getOrElse(0L))
           }.toMap
           case _ => Map.empty
         },
-        seed = num(j \ "seed"),
-        exactSizes = (j \ "exactSizes") match {
-          case JBool(b) => b; case _ => false },
-        coalesce = (j \ "coalesce") match {
-          case JBool(b) => b; case _ => false },
-        createdMillis = num(j \ "createdMillis"),
+        seed = lng(j \ "seed").getOrElse(0L),
+        exactSizes = bool(j \ "exactSizes").getOrElse(false),
+        coalesce = bool(j \ "coalesce").getOrElse(false),
+        createdMillis = lng(j \ "createdMillis").getOrElse(0L),
         // absent in descriptors written before grouped splits existed
         groupSplit = (j \ "groupSplit") match {
-          case JObject(_) =>
-            val g = j \ "groupSplit"
+          case g @ JObject(_) =>
             val ws = (g \ "weights") match {
-              case JArray(items) => items.collect {
-                case item @ JObject(_) =>
-                  val w = (item \ "w") match {
-                    case JDouble(d) => d
-                    case JInt(i)    => i.toDouble
-                    case _          => 0.0
-                  }
-                  str(item \ "name") -> w
+              case JArray(items) => items.collect { case item @ JObject(_) =>
+                str(item \ "name").getOrElse("") ->
+                  dbl(item \ "w").getOrElse(0.0)
               }
               case _ => Nil
             }
-            Some(graft.ops.Splits.GroupSplit(str(g \ "groupCol"), ws,
-              str(g \ "salt")))
+            Some(graft.ops.Splits.GroupSplit(
+              str(g \ "groupCol").getOrElse(""), ws,
+              str(g \ "salt").getOrElse("")))
           case _ => None
-        }))
+        })
     }
-  }
 
   /** Every persisted version of a view's training datasets. */
-  def list(spark: SparkSession, warehouseDir: String, viewName: String,
+  def list(docs: DocumentStore, viewName: String,
            viewVersion: Int): Seq[Int] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
     val prefix = s"${viewName}_${viewVersion}_"
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".json"))
-      .flatMap(n => n.stripPrefix(prefix).stripSuffix(".json").toIntOption)
-      .sorted
+    docs.ids(Kind).filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).toIntOption).sorted
   }
 
-  def delete(spark: SparkSession, warehouseDir: String, viewName: String,
-             viewVersion: Int, version: Int): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(
-      s"${dir(warehouseDir)}/${fileId(viewName, viewVersion, version)}.json"),
-      false)
-    ()
-  }
+  def delete(docs: DocumentStore, viewName: String, viewVersion: Int,
+             version: Int): Unit =
+    docs.delete(Kind, idOf(viewName, viewVersion, version))
 }

@@ -1,19 +1,18 @@
 package graft.catalog
 
+import graft.catalog.JsonFields._
 import graft.ops.Transformations
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Persisted transformation-function registry — the analog of the
   * reference's create/get_transformation_function
   * (feature_store.py:1316-1473, hopsworks_udf.py source capture): one
-  * JSON descriptor per registered BUILTIN transformation under
-  * `warehouseDir/_transformations/`. Only the declarative builtins can
-  * round-trip (a Scala lambda has no persisted form — those stay
-  * name-resolved via the caller registry, as ViewPersistence documents).
+  * JSON descriptor per registered BUILTIN transformation, a
+  * [[DocumentStore]] document under `warehouseDir/_transformations/`.
+  * Only the declarative builtins can round-trip (a Scala lambda has no
+  * persisted form — those stay name-resolved via the caller registry, as
+  * ViewPersistence documents).
   */
 object TransformPersistence {
 
@@ -24,60 +23,29 @@ object TransformPersistence {
       Transformations.builtin(name, builtin, input, outName, dropInput)
   }
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_transformations"
+  private val Kind = "transformations"
 
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  def save(spark: SparkSession, warehouseDir: String,
-           d: TransformDef): Unit = {
+  def save(docs: DocumentStore, d: TransformDef): Unit = {
     require(Transformations.Builtins.contains(d.builtin),
       s"only builtin transformations persist (got '${d.builtin}'); " +
         "register lambdas by name at load time instead")
-    val j: JValue = ("name" -> d.name) ~ ("builtin" -> d.builtin) ~
-      ("input" -> d.input) ~ ("outName" -> d.outName) ~
-      ("dropInput" -> d.dropInput)
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(new Path(s"${dir(warehouseDir)}/${d.name}.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    docs.put(Kind, d.name,
+      ("name" -> d.name) ~ ("builtin" -> d.builtin) ~
+        ("input" -> d.input) ~ ("outName" -> d.outName) ~
+        ("dropInput" -> d.dropInput))
   }
 
-  def load(spark: SparkSession, warehouseDir: String,
-           name: String): Option[TransformDef] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/$name.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      def str(v: JValue) = v match { case JString(s) => Some(s); case _ => None }
-      Some(TransformDef(
+  def load(docs: DocumentStore, name: String): Option[TransformDef] =
+    docs.get(Kind, name).map { j =>
+      TransformDef(
         name = str(j \ "name").getOrElse(name),
         builtin = str(j \ "builtin").getOrElse(""),
         input = str(j \ "input").getOrElse(""),
         outName = str(j \ "outName"),
-        dropInput = (j \ "dropInput") match {
-          case JBool(b) => b; case _ => false }))
+        dropInput = bool(j \ "dropInput").getOrElse(false))
     }
-  }
 
-  def list(spark: SparkSession, warehouseDir: String): Seq[String] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).sorted
-  }
+  def list(docs: DocumentStore): Seq[String] = docs.ids(Kind)
 
-  def delete(spark: SparkSession, warehouseDir: String, name: String): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(s"${dir(warehouseDir)}/$name.json"), false)
-    ()
-  }
+  def delete(docs: DocumentStore, name: String): Unit = docs.delete(Kind, name)
 }

@@ -1,17 +1,16 @@
 package graft.catalog
 
+import graft.catalog.JsonFields._
 import graft.ir._
 import graft.ops.Transformations
 import graft.view.FeatureView
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 
 /** Feature-view persistence: the full query IR (projection, nested joins,
   * filter tree, per-branch time travel, feature groups inlined) plus
-  * label/helper markers, as JSON under `warehouseDir/_views/` — the
+  * label/helper markers, as one [[DocumentStore]] document per view
+  * under `warehouseDir/_views/<name>_<version>.json` — the
   * analog of the reference's server-side feature-view metadata
   * (python/hsfs/feature_view.py, core/feature_view_engine.py).
   *
@@ -24,34 +23,8 @@ import org.json4s.jackson.JsonMethods
   */
 object ViewPersistence {
 
-  private def dir(warehouseDir: String) = s"$warehouseDir/_views"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  // -- filter values (Any) ---------------------------------------------------
-
-  private def valueJson(v: Any): JValue = v match {
-    case s: String     => JString(s)
-    case i: Int        => JInt(i)
-    case l: Long       => JInt(l)
-    case d: Double     => JDouble(d)
-    case f: Float      => JDouble(f.toDouble)
-    case b: Boolean    => JBool(b)
-    case xs: Seq[_]    => JArray(xs.map(valueJson).toList)
-    case other         => JString(other.toString)
-  }
-
-  private def valueFrom(j: JValue): Any = j match {
-    case JString(s) => s
-    case JInt(i)    => i.toLong
-    case JDouble(d) => d
-    case JBool(b)   => b
-    case JArray(xs) => xs.map(valueFrom)
-    case other      => JsonMethods.compact(JsonMethods.render(other))
-  }
+  private val Kind = "views"
+  private def idOf(name: String, version: Int) = s"${name}_$version"
 
   // -- filter tree -----------------------------------------------------------
 
@@ -71,9 +44,6 @@ object ViewPersistence {
     case FilterOr(l, r) =>
       ("op" -> "or") ~ ("left" -> filterJson(l)) ~ ("right" -> filterJson(r))
   }
-
-  private def str(v: JValue): Option[String] =
-    v match { case JString(s) => Some(s); case _ => None }
 
   private def filterFrom(j: JValue): FilterExpr = str(j \ "op") match {
     case Some("and") => FilterAnd(filterFrom(j \ "left"), filterFrom(j \ "right"))
@@ -112,10 +82,6 @@ object ViewPersistence {
   }
 
   private[catalog] def queryFrom(j: JValue): Query = {
-    def strs(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.flatMap(str); case _ => Nil }
-    def lng(v: JValue): Option[Long] =
-      v match { case JInt(i) => Some(i.toLong); case _ => None }
     val tt = (lng(j \ "asOf"), lng(j \ "excludeUntil")) match {
       case (None, None) => None
       case (a, e)       => Some(TimeTravel(a, e))
@@ -147,46 +113,26 @@ object ViewPersistence {
 
   // -- feature view ----------------------------------------------------------
 
-  def save(spark: SparkSession, warehouseDir: String,
-           view: FeatureView): Unit = {
-    val j: JValue =
+  def save(docs: DocumentStore, view: FeatureView): Unit =
+    docs.put(Kind, idOf(view.name, view.version),
       ("name" -> view.name) ~ ("version" -> view.version) ~
         ("query" -> queryJson(view.query)) ~
         ("labels" -> view.labels) ~
         ("inferenceHelperColumns" -> view.inferenceHelperColumns) ~
         ("trainingHelperColumns" -> view.trainingHelperColumns) ~
-        ("transformations" -> view.transformations.map(_.name))
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val out = fs.create(
-      new Path(s"${dir(warehouseDir)}/${view.name}_${view.version}.json"), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(j))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+        ("transformations" -> view.transformations.map(_.name)))
 
   /** Load a view; `transformationRegistry` resolves persisted
     * transformation names back to their registered implementations, and
     * `resolve` supplies any name missing from the registry (e.g. lazy
     * lookup in the persisted transformation store — consulted only for
-    * the names THIS view references, in one read of the view file).
+    * the names THIS view references, in one read of the view document).
     */
-  def load(spark: SparkSession, warehouseDir: String, name: String,
-           version: Int,
-           transformationRegistry: Map[String, Transformations.Transformation]
-             = Map(),
-           resolve: String => Option[Transformations.Transformation]
-             = _ => None): Option[FeatureView] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/${name}_$version.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val j = JsonMethods.parse(txt)
-      def strs(v: JValue): Seq[String] =
-        v match { case JArray(xs) => xs.flatMap(str); case _ => Nil }
+  def load(docs: DocumentStore, name: String, version: Int,
+           transformationRegistry: Map[String, Transformations.Transformation],
+           resolve: String => Option[Transformations.Transformation])
+      : Option[FeatureView] =
+    docs.get(Kind, idOf(name, version)).map { j =>
       val wanted = strs(j \ "transformations")
       val resolved: Map[String, Transformations.Transformation] =
         wanted.flatMap { n =>
@@ -198,52 +144,31 @@ object ViewPersistence {
           s"${missing.mkString(", ")} — pass them in transformationRegistry " +
           "(lambdas have no persisted form; register them like the " +
           "reference's transformation functions)")
-      Some(FeatureView(
+      FeatureView(
         name = str(j \ "name").getOrElse(name),
-        version = (j \ "version") match {
-          case JInt(i) => i.toInt; case _ => version },
+        version = lng(j \ "version").fold(version)(_.toInt),
         query = queryFrom(j \ "query"),
         labels = strs(j \ "labels"),
         inferenceHelperColumns = strs(j \ "inferenceHelperColumns"),
         trainingHelperColumns = strs(j \ "trainingHelperColumns"),
-        transformations = wanted.map(resolved)))
+        transformations = wanted.map(resolved))
     }
-  }
 
   /** (name, version) of every persisted view. */
-  def list(spark: SparkSession, warehouseDir: String): Seq[(String, Int)] = {
-    val (fs, p) = fsOf(spark, dir(warehouseDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".json")).flatMap { f =>
-        val stem = f.stripSuffix(".json")
-        val cut = stem.lastIndexOf('_')
-        if (cut <= 0) None
-        else stem.drop(cut + 1).toIntOption.map(v => (stem.take(cut), v))
-      }
-  }
+  def list(docs: DocumentStore): Seq[(String, Int)] =
+    docs.ids(Kind).flatMap { stem =>
+      val cut = stem.lastIndexOf('_')
+      if (cut <= 0) None
+      else stem.drop(cut + 1).toIntOption.map(v => (stem.take(cut), v))
+    }
 
   /** A persisted view's query IR alone — no transformation registry
     * needed (provenance/lineage walks don't execute the view).
     */
-  def loadQueryRaw(spark: SparkSession, warehouseDir: String, name: String,
-                   version: Int): Option[Query] = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    val p = new Path(s"${dir(warehouseDir)}/${name}_$version.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(in.readAllBytes, java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      Some(queryFrom(JsonMethods.parse(txt) \ "query"))
-    }
-  }
+  def loadQueryRaw(docs: DocumentStore, name: String,
+                   version: Int): Option[Query] =
+    docs.get(Kind, idOf(name, version)).map(j => queryFrom(j \ "query"))
 
-  def delete(spark: SparkSession, warehouseDir: String, name: String,
-             version: Int): Unit = {
-    val (fs, _) = fsOf(spark, dir(warehouseDir))
-    fs.delete(new Path(s"${dir(warehouseDir)}/${name}_$version.json"), false)
-    ()
-  }
+  def delete(docs: DocumentStore, name: String, version: Int): Unit =
+    docs.delete(Kind, idOf(name, version))
 }

@@ -1,12 +1,11 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.JsonDSL._
-import org.json4s.jackson.JsonMethods
 import graft.ops.Materialize.PinOps
 
 /** Feature-monitoring configuration engine: persisted monitoring configs,
@@ -544,16 +543,14 @@ object Monitoring {
 
   final class MonitoringEngine(spark: SparkSession, warehouseDir: String) {
 
-    private def cfgDir = s"$warehouseDir/_monitoring/configs"
+    import graft.catalog.JsonFields._
+
+    private val docs = new graft.catalog.DocumentStore(spark, warehouseDir)
+    private val Kind = "monitoring/configs"
     private def resultsDir = s"$warehouseDir/_monitoring/results"
 
-    private def fsOf(path: String): (FileSystem, Path) = {
-      val p = new Path(path)
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
-
-    def saveConfig(cfg: MonitoringConfig): Unit = {
-      val j: JValue =
+    def saveConfig(cfg: MonitoringConfig): Unit =
+      docs.put(Kind, cfg.name,
         ("name" -> cfg.name) ~ ("featureGroup" -> cfg.featureGroup) ~
           ("version" -> cfg.version) ~ ("feature" -> cfg.feature) ~
           ("eventTimeCol" -> cfg.eventTimeCol) ~
@@ -569,91 +566,53 @@ object Monitoring {
           ("hi" -> cfg.comparison.hi) ~
           ("everyMillis" -> cfg.schedule.everyMillis) ~
           ("startMillis" -> cfg.schedule.startMillis) ~
-          ("enabled" -> cfg.enabled)
-      val (fs, _) = fsOf(cfgDir)
-      val out = fs.create(new Path(s"$cfgDir/${cfg.name}.json"), true)
-      try out.write(JsonMethods.compact(JsonMethods.render(j))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+          ("enabled" -> cfg.enabled))
 
     private def windowJson(w: WindowSpec): JValue =
       ("sizeMillis" -> w.sizeMillis) ~ ("offsetMillis" -> w.offsetMillis) ~
         ("rowPercentage" -> w.rowPercentage)
 
     private def windowFrom(j: JValue): WindowSpec = WindowSpec(
-      sizeMillis = (j \ "sizeMillis") match {
-        case JInt(i) => Some(i.toLong); case _ => None },
-      offsetMillis = (j \ "offsetMillis") match {
-        case JInt(i) => i.toLong; case _ => 0L },
-      rowPercentage = (j \ "rowPercentage") match {
-        case JDouble(d) => d; case JInt(i) => i.toDouble; case _ => 1.0 })
+      sizeMillis = lng(j \ "sizeMillis"),
+      offsetMillis = lng(j \ "offsetMillis").getOrElse(0L),
+      rowPercentage = dbl(j \ "rowPercentage").getOrElse(1.0))
 
-    private def cfgFrom(j: JValue): MonitoringConfig = {
-      def str(v: JValue) = v match { case JString(s) => s; case _ => "" }
-      def lng(v: JValue, d: Long) =
-        v match { case JInt(i) => i.toLong; case _ => d }
-      def dbl(v: JValue): Option[Double] = v match {
-        case JDouble(x) => Some(x); case JInt(i) => Some(i.toDouble)
-        case _ => None }
-      def bool(v: JValue, d: Boolean) =
-        v match { case JBool(b) => b; case _ => d }
+    private def cfgFrom(j: JValue): MonitoringConfig =
       MonitoringConfig(
-        name = str(j \ "name"),
-        featureGroup = str(j \ "featureGroup"),
-        version = lng(j \ "version", 1L).toInt,
-        feature = str(j \ "feature"),
-        eventTimeCol = str(j \ "eventTimeCol"),
+        name = str(j \ "name").getOrElse(""),
+        featureGroup = str(j \ "featureGroup").getOrElse(""),
+        version = lng(j \ "version").getOrElse(1L).toInt,
+        feature = str(j \ "feature").getOrElse(""),
+        eventTimeCol = str(j \ "eventTimeCol").getOrElse(""),
         detection = windowFrom(j \ "detection"),
         reference = (j \ "reference") match {
           case JNothing | JNull => None
           case w => Some(windowFrom(w)) },
         referenceValue = dbl(j \ "referenceValue"),
         comparison = ComparisonSpec(
-          metric = str(j \ "metric"),
+          metric = str(j \ "metric").getOrElse(""),
           threshold = dbl(j \ "threshold").getOrElse(0.0),
-          relative = bool(j \ "relative", d = false),
-          strict = bool(j \ "strict", d = false),
-          bins = lng(j \ "bins", 10L).toInt,
+          relative = bool(j \ "relative").getOrElse(false),
+          strict = bool(j \ "strict").getOrElse(false),
+          bins = lng(j \ "bins").getOrElse(10L).toInt,
           lo = dbl(j \ "lo").getOrElse(0.0),
           hi = dbl(j \ "hi").getOrElse(1.0)),
         schedule = ScheduleSpec(
-          everyMillis = lng(j \ "everyMillis", 0L),
-          startMillis = lng(j \ "startMillis", 0L)),
-        enabled = bool(j \ "enabled", d = true))
-    }
+          everyMillis = lng(j \ "everyMillis").getOrElse(0L),
+          startMillis = lng(j \ "startMillis").getOrElse(0L)),
+        enabled = bool(j \ "enabled").getOrElse(true))
 
-    def getConfig(name: String): Option[MonitoringConfig] = {
-      val (fs, _) = fsOf(cfgDir)
-      val p = new Path(s"$cfgDir/$name.json")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt =
-          try new String(in.readAllBytes,
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        Some(cfgFrom(JsonMethods.parse(txt)))
-      }
-    }
+    def getConfig(name: String): Option[MonitoringConfig] =
+      docs.get(Kind, name).map(cfgFrom)
 
-    def listConfigs(): Seq[MonitoringConfig] = {
-      val (fs, p) = fsOf(cfgDir)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".json"))
-        .flatMap(st => getConfig(st.getPath.getName.stripSuffix(".json")))
-    }
+    def listConfigs(): Seq[MonitoringConfig] = docs.ids(Kind).flatMap(getConfig)
 
-    def deleteConfig(name: String): Unit = {
-      val (fs, _) = fsOf(cfgDir)
-      fs.delete(new Path(s"$cfgDir/$name.json"), false)
-      ()
-    }
+    def deleteConfig(name: String): Unit = docs.delete(Kind, name)
 
     /** Persisted result log (parquet append). */
     def results(): DataFrame = {
-      val (fs, p) = fsOf(resultsDir)
-      if (!fs.exists(p)) {
+      val p = new Path(resultsDir)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
         import spark.implicits._
         Seq.empty[MonitoringResult].toDF()
       } else spark.read.parquet(resultsDir)

@@ -144,4 +144,27 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(json.contains(""""startup_total":1.4"""))
     assert(json.contains(""""value":1.2"""), "value stays pure operator time")
   }
+
+  test("Bench.render: calibration at both sweep ends lands in calibration_runs, best in calibration") {
+    val results: Seq[(String, Seq[Bench.Rep])] = Seq(
+      Bench.CalibName -> Seq(Right(2.0), Right(1.8)),
+      "q01_agg" -> Seq(Right(0.7), Right(0.6)),
+      s"${Bench.CalibName}_end" -> Seq(Right(2.4)))
+    val json = Bench.render(results)
+    // neither calibration entry may count as a query (runs keeps their
+    // per-rep times for drift visibility — that is intended)
+    assert(json.contains(""""declared":1"""), json)
+    assert(json.contains(""""queries":{"q01_agg":0.6}"""), json)
+    assert(json.contains(""""calibration":1.8"""), json)
+    assert(json.contains(""""calibration_runs":[1.8,2.4]"""), json)
+  }
+
+  test("Bench.converged: sub-second min fast-stops at MinReps, slow descents do not") {
+    assert(Bench.converged(Seq(2.5, 1.1, 0.9)),
+      "a sub-second running min must stop at MinReps")
+    assert(!Bench.converged(Seq(5.0, 4.0, 3.0)),
+      "a still-descending multi-second sequence must keep running")
+    assert(Bench.converged(Seq(5.0, 4.0, 3.9)),
+      "a stable multi-second min converges as before")
+  }
 }

@@ -85,4 +85,26 @@ class BurstinessPuritySpec extends SparkSpec {
     assert(out(3L) == (0.0, 0.0, 0.0, 0.0))
     assert(out(4L) == (0.5, 0.0, 0.0, 0.0))
   }
+
+  test("ScriptMixCounts: VT is NOT whitespace (RE2 \\s parity), the five RE2 chars are") {
+    // "ab" → 3 codepoints, 0 whitespace under RE2 semantics
+    val df = Seq("ab", "a b\tc\nd\fe\rf").toDF("text")
+      .select(graft.functions.TextScript.scriptMixCounts(col("text"))
+        .as("m"))
+    val rows = df.collect().map(_.getSeq[Long](0))
+    assert(rows(0)(0) == 3L && rows(0)(4) == 0L,
+      s"VT must not count as whitespace: ${rows(0)}")
+    assert(rows(1)(4) == 5L,
+      s"tab/LF/FF/CR/space must all count: ${rows(1)}")
+  }
+
+  test("burstiness: hand value unchanged after the DECIMAL(38,0) accumulator") {
+    // gaps 10 s and 30 s → μ=20, σ=10 → B = (10−20)/(10+20) = −1/3
+    val df = Seq(("e", 0L), ("e", 10000000L), ("e", 40000000L))
+      .toDF("entity", "ts_us")
+    val out = TemporalFeatures.burstiness(df, col("entity"), col("ts_us"))
+      .collect().head
+    assert(out.getAs[Long]("n_gaps") == 2L)
+    assert(math.abs(out.getAs[Double]("burstiness") - (-0.333333)) < 1e-6)
+  }
 }

@@ -478,4 +478,15 @@ class CorpusShardingSpec extends SparkSpec {
     assert(got.select("doc_id").as[Long].collect().toSet === Set(2L))
     assert(got.columns.toSeq === Seq("doc_id", "text"))
   }
+
+  test("duplicateClusters still converges with the lazy checkpoint loop") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L), (7L, 7L), (8L, 9L))
+      .toDF("idA", "idB")
+    val comp = Dedup.duplicateClusters(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp(1L) == 1L && comp(2L) == 1L && comp(3L) == 1L)
+    assert(comp(4L) == 4L && comp(5L) == 4L)
+    assert(comp(8L) == 8L && comp(9L) == 8L)
+    assert(!comp.contains(7L), "self-pairs are not duplicate edges")
+  }
 }

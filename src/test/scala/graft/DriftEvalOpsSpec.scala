@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{Monitoring, Similarity, TemporalFeatures, TextAnalysis}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
 /** Round-12 operators: JSD drift, truncated rank-biased overlap,
   * per-class simplified silhouette, Kaplan–Meier survival, OOV rate,
@@ -10,6 +11,23 @@ import org.apache.spark.sql.functions._
   */
 class DriftEvalOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  // two rankings over a shared id pool: (qid, id, rank) with rank a
+  // permutation position 1..k of a sampled subset
+  private val rankingsGen: Gen[(List[(Long, Long, Int)], List[(Long, Long, Int)])] = {
+    def one(qids: Seq[Long], pool: Seq[Long]): Gen[List[(Long, Long, Int)]] =
+      qids.foldLeft(Gen.const(List.empty[(Long, Long, Int)])) { (acc, q) =>
+        for {
+          l <- acc
+          ids <- Gen.pick(5, pool)
+        } yield l ++ ids.toList.zipWithIndex.map {
+          case (id, i) => (q, id, i + 1) }
+      }
+    for {
+      a <- one(Seq(1L, 2L, 3L), 10L to 25L)
+      b <- one(Seq(1L, 2L, 3L), 10L to 25L)
+    } yield (a, b)
+  }
 
   test("jsdDrift: identical windows score 0; bounded by ln 2 on " +
     "disjoint windows") {
@@ -190,5 +208,132 @@ class DriftEvalOpsSpec extends SparkSpec {
       minPairCount = 2L)
     assert(out.collect().map(r => (r.getAs[String]("word_a"),
       r.getAs[String]("word_b"))).toSet == Set(("a", "b")))
+  }
+
+  test("invariants: RBO in [0, 1 − p^k]; tau in [−1, 1]; both agree " +
+    "on n_common") {
+    forSamples(rankingsGen) { case (a, b) =>
+      val da = a.toDF("qid", "id", "rnk")
+      val db = b.toDF("qid", "id", "rnk")
+      val rbo = Similarity.rankBiasedOverlap(da, db, "qid", "id", "rnk",
+        k = 5, p = 0.8).collect()
+      val cap = 1.0 - math.pow(0.8, 5) + 1e-9
+      rbo.foreach { r =>
+        val v = r.getDouble(2)
+        assert(v >= 0.0 && v <= cap, s"rbo out of range: $v")
+      }
+      val tau = Similarity.kendallTau(da, db, "qid", "id", "rnk", k = 5)
+        .collect()
+      tau.foreach { r =>
+        if (!r.isNullAt(5)) {
+          val t = r.getDouble(5)
+          assert(t >= -1.0 && t <= 1.0, s"tau out of range: $t")
+        }
+      }
+      val nc1 = rbo.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val nc2 = tau.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(nc1 == nc2, "RBO and tau must see the same common sets")
+    }
+  }
+
+  test("invariants: kaplanMeier survival is non-increasing in t and " +
+    "stays in [0, 1]") {
+    val durGen = Gen.listOfN(60, for {
+      t <- Gen.choose(1L, 12L)
+      ev <- Gen.oneOf(true, false)
+    } yield (t, ev))
+    forSamples(durGen) { rows =>
+      val out = TemporalFeatures.kaplanMeier(rows.toDF("dur", "ev"),
+          col("dur"), col("ev"))
+        .orderBy("t").collect()
+        .map(r => (r.getLong(0), r.getDouble(4)))
+      out.foreach { case (_, s) =>
+        assert(s >= 0.0 && s <= 1.0, s"survival out of [0,1]: $s") }
+      out.sliding(2).foreach {
+        case Array((t1, s1), (t2, s2)) =>
+          assert(s2 <= s1 + 1e-9,
+            s"survival must not increase: S($t1)=$s1 < S($t2)=$s2")
+        case _ =>
+      }
+    }
+  }
+
+  test("drift battery: NULL window-flag rows count in NEITHER total") {
+    val df = Seq(("g", 0.5, Option(true)), ("g", 0.5, Option(true)),
+      ("g", 0.6, Option(false)), ("g", 0.6, Option(false)),
+      ("g", 0.7, Option.empty[Boolean]))
+      .toDF("k", "v", "is_ref")
+    for (scored <- Seq(
+      Monitoring.psiDrift(df, Seq("k"), col("v"), col("is_ref"),
+        bins = 4, lo = 0.0, hi = 1.0),
+      Monitoring.jsdDrift(df, Seq("k"), col("v"), col("is_ref"),
+        bins = 4, lo = 0.0, hi = 1.0),
+      Monitoring.ksDrift(df, Seq("k"), col("v"), col("is_ref"),
+        bins = 4, lo = 0.0, hi = 1.0),
+      Monitoring.wassersteinDrift(df, Seq("k"), col("v"), col("is_ref"),
+        bins = 4, lo = 0.0, hi = 1.0),
+      Monitoring.chiSquareDrift(df, Seq("k"), col("v"), col("is_ref")))) {
+      val r = scored.collect().head
+      assert(r.getAs[Long]("ref_total") == 2L &&
+        r.getAs[Long]("det_total") == 2L,
+        s"null-flag row leaked into a window total: $r")
+    }
+  }
+
+  test("FromCounts folds: unmerged duplicate (keys, bin) partials fold like merged") {
+    val merged = Seq(("g", 0, 5L, 1L), ("g", 1, 2L, 6L))
+      .toDF("k", "bin", "ref_n", "det_n")
+    val partials = Seq(("g", 0, 2L, 1L), ("g", 0, 3L, 0L),
+      ("g", 1, 2L, 4L), ("g", 1, 0L, 2L))
+      .toDF("k", "bin", "ref_n", "det_n")
+    def one(df: org.apache.spark.sql.DataFrame, f: String): Map[String, Any] = {
+      val r = (f match {
+        case "psi" => Monitoring.psiFromCounts(df, Seq("k"), bins = 2)
+        case "jsd" => Monitoring.jsdFromCounts(df, Seq("k"), bins = 2)
+        case "ks"  => Monitoring.ksFromCounts(df, Seq("k"))
+        case _     => Monitoring.wassersteinFromCounts(df, Seq("k"), 0.25)
+      }).collect().head
+      r.schema.fieldNames.map(n => n -> r.getAs[Any](n)).toMap
+    }
+    for (f <- Seq("psi", "jsd", "ks", "w1"))
+      assert(one(partials, f) == one(merged, f),
+        s"$f: unmerged partials diverged from the merged fold")
+  }
+
+  test("kaplanMeier: refuses a continuous duration column loudly") {
+    val cont = (1 to 50).map(i => (i.toLong * 7 + 1, true)).toDF("t", "ev")
+    val err = intercept[IllegalArgumentException] {
+      TemporalFeatures.kaplanMeier(cont, col("t"), col("ev"),
+        maxDistinct = 10).collect()
+    }
+    assert(err.getMessage.contains("distinct"))
+    // bounded-bucket use keeps working and S(t) is a survival curve
+    val ok = TemporalFeatures.kaplanMeier(
+      Seq((1L, true), (1L, false), (2L, true), (3L, false))
+        .toDF("t", "ev"), col("t"), col("ev")).collect()
+    assert(ok.length == 3 &&
+      ok.forall(r => r.getAs[Double]("survival") >= 0.0 &&
+        r.getAs[Double]("survival") <= 1.0))
+  }
+
+  test("chiSquareDrift: null category is a real cell and dof counts it") {
+    val df = Seq(
+      ("g", Option("a"), true), ("g", Option("a"), false),
+      ("g", Option("b"), true), ("g", Option("b"), false),
+      ("g", None, true), ("g", None, false))
+      .toDF("k", "cat", "is_ref")
+    val out = Monitoring.chiSquareDrift(df, Seq("k"), col("cat"),
+      col("is_ref")).collect().head
+    // three cells (a, b, null) → dof = 2; the old countDistinct form
+    // reported 1, internally inconsistent with the 3-cell chi2 sum
+    assert(out.getAs[Long]("dof") == 2L)
+  }
+
+  test("chiSquareDrift: dof unchanged on null-free data") {
+    val df = Seq(("g", "a", true), ("g", "b", false), ("g", "c", true))
+      .toDF("k", "cat", "is_ref")
+    val out = Monitoring.chiSquareDrift(df, Seq("k"), col("cat"),
+      col("is_ref")).collect().head
+    assert(out.getAs[Long]("dof") == 2L)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{IncrementalStats, Multimodal}
+import graft.ops.{IncrementalStats, IvfIndex, Multimodal, Transformations}
 import org.apache.spark.sql.functions._
 
 /** The round-8 additions: perceptual average-hash, mergeable incremental
@@ -427,5 +427,61 @@ class IncrementalOpsSpec extends SparkSpec {
       }.min
       assert(dmin < 1.0, s"centroid far from any true center: $dmin")
     }
+  }
+
+  test("winsorizeApprox matches exact winsorize on a bounded domain") {
+    val rows = for (i <- 1 to 500) yield ("g", i.toLong, (i % 50).toDouble)
+    val df = rows.toDF("k", "id", "v")
+    val exact = Transformations.winsorize(df, Seq("k"), col("v"), 5, 95, 100)
+      .select("id", "value_wins").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val approx = Transformations.winsorizeApprox(df, Seq("k"), col("v"),
+        5, 95, 100)
+      .select("id", "value_wins").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(exact.keySet == approx.keySet, "same rows out of both variants")
+    exact.foreach { case (id, v) =>
+      assert(math.abs(approx(id) - v) <= 1.0,
+        s"row $id: exact=$v approx=${approx(id)}")
+    }
+  }
+
+  test("winsorize drops null-value rows (the fitted-population contract)") {
+    val df = Seq(("g", 1L, Some(5.0)), ("g", 2L, None), ("g", 3L, Some(9.0)))
+      .toDF("k", "id", "v")
+    val out = Transformations.winsorize(df, Seq("k"), col("v"), 1, 99, 100)
+    assert(out.select("id").collect().map(_.getLong(0)).sorted
+      .sameElements(Array(1L, 3L)))
+  }
+
+  test("localKMeans honors k with distinct centroids when several cells empty") {
+    // 3 tight clusters, k=6: at least 3 cells start or go empty in the
+    // same Lloyd pass; the reseed must not hand the same worst point to
+    // two of them
+    val pts = (Seq.fill(20)(Array(0f, 0f)) ++ Seq.fill(20)(Array(10f, 0f)) ++
+      Seq.fill(20)(Array(0f, 10f)) ++
+      Seq(Array(50f, 50f), Array(-50f, 50f), Array(50f, -50f))).toArray
+    val cs = IvfIndex.localKMeans(pts, 6, seed = 7L, maxIter = 20)
+    assert(cs.length == 6)
+    val distinct = cs.map(_.toSeq).toSet
+    assert(distinct.size == 6,
+      s"duplicate centroids after reseed: ${cs.map(_.mkString(",")).mkString(" | ")}")
+  }
+
+  test("IncrementalStats: nulls filtered before grouping; all-null bucket emits no partial") {
+    val df = Seq(
+      ("k", 1L, Some(10L)), ("k", 1L, None), ("k", 1L, Some(20L)),
+      ("k", 2L, None), ("k", 2L, None))
+      .toDF("g", "b", "v")
+    val p = IncrementalStats.partials(df, Seq("g"), col("b"), col("v"))
+      .collect()
+    assert(p.length == 1, "the all-null bucket 2 must emit no partial row")
+    val r = p.head
+    assert(r.getAs[Long]("n") == 2L && r.getAs[Long]("sum_v") == 30L)
+    val m = IncrementalStats.merge(
+      IncrementalStats.partials(df, Seq("g"), col("b"), col("v")),
+      Seq("g")).collect().head
+    assert(m.getAs[Long]("n") == 2L, "merged n must equal a non-null rescan")
+    assert(m.getAs[Long]("n_buckets") == 1L)
   }
 }

@@ -263,4 +263,17 @@ class PitJoinSpec extends SparkSpec {
       .select($"event_id", $"version_id".as("d_version_id"))
     assert(fast.except(naive).isEmpty && naive.except(fast).isEmpty)
   }
+
+  test("PIT tie-break: duplicate right timestamps resolve to max event_id") {
+    import graft.ops.PointInTimeJoin
+    val spine = Seq((1L, 100L)).toDF("user_id", "ts")
+    val right = Seq((1L, 50L, 7L, 1.0), (1L, 50L, 9L, 2.0),
+        (1L, 50L, 8L, 3.0))
+      .toDF("user_id", "ts", "event_id", "value")
+    val out = PointInTimeJoin.asOf(spine, "ts", right, "ts",
+      Seq("user_id"), Seq("user_id"), prefix = "r_",
+      tieBreak = Some("event_id")).collect().head
+    assert(out.getAs[Long]("r_event_id") == 9L,
+      "largest tie-break value must win the running last()")
+  }
 }

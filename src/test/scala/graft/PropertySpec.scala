@@ -7,21 +7,12 @@ import graft.ops.PointInTimeJoin
 import graft.planner.QueryPlanner
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** Property-based tests for the filter/join algebra and the PIT join
   * (SURVEY §5 plan: scalacheck over the operator algebra).
   */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
-
-  /** Deterministic sampling driver (scalatestplus bridge unavailable in
-    * the offline cache): evaluates the property over `n` seeded samples.
-    */
-  private def forSamples[A](gen: Gen[A], n: Int = 15)(f: A => Unit): Unit =
-    (0 until n).foreach { i =>
-      gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(f)
-    }
 
   private val rowsGen: Gen[List[(Long, Double, String)]] =
     Gen.listOfN(40, for {
@@ -35,7 +26,7 @@ class PropertySpec extends SparkSpec {
       rows <- rowsGen; thr <- Gen.choose(-50.0, 50.0)
       sv <- Gen.oneOf("a", "b", "c")
     } yield (rows, thr, sv)
-    forSamples(g) { case (rows, thr, sv) =>
+    forSamples(g, n = 15) { case (rows, thr, sv) =>
         if (rows.nonEmpty) {
           val df = rows.toDF("k", "x", "s")
           val fe = (("x" > thr) && ("s" =!= sv)) ||
@@ -62,7 +53,7 @@ class PropertySpec extends SparkSpec {
   } yield (spine, right)
 
   test("property: PIT join equals brute-force latest-≤-t semantics") {
-    forSamples(pitGen) { case (spineRows, rightRows) =>
+    forSamples(pitGen, n = 15) { case (spineRows, rightRows) =>
       if (spineRows.nonEmpty) {
         val spine = spineRows.zipWithIndex
           .map { case ((k, t), i) => (i.toLong, k, t) }.toDF("sid", "k", "t")

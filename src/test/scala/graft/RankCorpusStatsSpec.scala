@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{GraphOps, Similarity, Statistics, TextAnalysis}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
 /** Round-12 batch 2: Kendall tau ranker agreement, per-doc character
   * entropy, Zipf slope, vocabulary overlap, IPW-adjusted means, and
@@ -146,5 +147,60 @@ class RankCorpusStatsSpec extends SparkSpec {
     val wantU = BigDecimal(-math.log(0.5))
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(o2.getDouble(2) == wantU)
+  }
+
+  test("invariants: HHI in [1/n_members, 1]; tokenJsd and jsdDrift in " +
+    "[0, ln 2]") {
+    val memGen = Gen.listOfN(80, for {
+      g <- Gen.oneOf("g1", "g2")
+      m <- Gen.choose(0, 9)
+    } yield (g, s"m$m"))
+    forSamples(memGen) { rows =>
+      Statistics.hhiConcentration(rows.toDF("g", "m"), Seq("g"),
+          col("m"))
+        .collect().foreach { r =>
+          val (n, h) = (r.getLong(1), r.getDouble(3))
+          assert(h >= 1.0 / n - 1e-9 && h <= 1.0 + 1e-9,
+            s"hhi out of [1/$n, 1]: $h")
+        }
+    }
+    val docGen = Gen.listOfN(30, for {
+      w <- Gen.listOfN(6, Gen.oneOf("a", "b", "c", "d", "e"))
+      r <- Gen.oneOf(true, false)
+    } yield (w.mkString(" "), r))
+    forSamples(docGen) { rows =>
+      val df = rows.toDF("text", "r")
+      // degenerate single-sided samples have no distribution pair
+      if (rows.exists(_._2) && rows.exists(!_._2)) {
+        val j = TextAnalysis.tokenJsd(df, col("text"), col("r"))
+          .collect().head.getAs[Double]("jsd")
+        assert(j >= 0.0 && j <= math.log(2.0) + 1e-9,
+          s"tokenJsd out of [0, ln2]: $j")
+      }
+    }
+  }
+
+  test("invariants: charEntropy bounded by log2(distinct chars); " +
+    "scriptMix ratios sum to at most 1") {
+    val txtGen = Gen.listOfN(12,
+      Gen.listOfN(20, Gen.oneOf(('a' to 'f') ++ Seq(' ', '1', '中')))
+        .map(_.mkString))
+    forSamples(txtGen) { texts =>
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("id", "text")
+      TextAnalysis.charEntropy(df, "id", "text").collect().foreach { r =>
+        val (nd, h) = (r.getLong(2), r.getDouble(3))
+        val cap = math.log(nd.toDouble) / math.log(2.0) + 1e-4
+        assert(h >= -0.0001 && h <= cap,
+          s"entropy $h exceeds log2($nd)")
+      }
+      TextAnalysis.scriptMix(df, "id", "text").collect().foreach { r =>
+        val s = r.getDouble(1) + r.getDouble(2) + r.getDouble(3) +
+          r.getDouble(4)
+        assert(s <= 1.0 + 1e-3, s"script ratios sum past 1: $s")
+        Seq(1, 2, 3, 4).foreach(i =>
+          assert(r.getDouble(i) >= 0.0 && r.getDouble(i) <= 1.0))
+      }
+    }
   }
 }

@@ -307,4 +307,24 @@ class RetrievalConformalSpec extends SparkSpec {
       assert(cov >= 0.9, s"key $k coverage $cov below 1 − α")
     }
   }
+
+  test("rankEval surfaces a NULL-rank row for a query whose relevant " +
+    "doc is absent from the corpus (r11 advice: no silent drop)") {
+    import graft.ops.Similarity
+    val corpus = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
+        (3L, Array(0.7f, 0.7f)))
+      .toDF("id", "vec")
+    val queries = Seq(
+        (10L, Array(1.0f, 0.1f), 1L),   // relevant id present
+        (11L, Array(0.1f, 1.0f), 99L))  // relevant id MISSING
+      .toDF("qid", "qvec", "rel")
+    val out = Similarity.rankEval(corpus, "id", "vec",
+        queries, "qid", "qvec", "rel", k = 2)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out.size == 2, "both queries must appear in the eval output")
+    assert(out(10L).getAs[Long]("rank") == 1L)
+    assert(out(11L).isNullAt(out(11L).fieldIndex("rank")),
+      "missing relevant doc must yield NULL rank, not a dropped row")
+    assert(out(11L).isNullAt(out(11L).fieldIndex("reciprocal_rank")))
+  }
 }

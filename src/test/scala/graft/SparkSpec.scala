@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per JVM). */
@@ -28,4 +30,12 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Deterministic sampling driver (scalatestplus bridge unavailable in
+    * the offline cache): evaluates the property over `n` seeded samples.
+    */
+  protected def forSamples[A](gen: Gen[A], n: Int = 8)(f: A => Unit): Unit =
+    (0 until n).foreach { i =>
+      gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(f)
+    }
 }

@@ -112,4 +112,46 @@ class SqlExtensionsSpec extends SparkSpec {
     val row = QueryPlanner.plan(spark, q).collect().head
     assert(row.getAs[String]("bv") === "b1")
   }
+
+  test("stores built on one session register the SQL functions once: " +
+    "no replaced-function WARN") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-register-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function"))
+          replaced.add(m)
+      }
+    }
+    capture.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      // start from a session without the functions, so the first store
+      // registers them and the next two find them
+      val reg = spark.sessionState.functionRegistry
+      GraftExtensions.functions.foreach { case (name, _, _) =>
+        reg.dropFunction(FunctionIdentifier(name)) }
+      val wh = Files.createTempDirectory("graft_register_once").toString
+      val stores = (1 to 3).map(_ =>
+        new graft.catalog.FeatureStore(spark, warehouseDir = wh))
+      assert(replaced.isEmpty, s"${replaced.size} WARN events, e.g. " +
+        replaced.peek())
+      val c = stores.last.sql(
+        "SELECT vec_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
+        .collect().head.getAs[Double]("c")
+      assert(math.abs(c - 1.0) < 1e-9)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
 }

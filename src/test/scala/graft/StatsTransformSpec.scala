@@ -255,4 +255,20 @@ class StatsTransformSpec extends SparkSpec {
       .collect().map(_.getAs[Int]("b"))
     assert(amb(0) !== amb(1))
   }
+
+  test("approxQuantileByKey agrees with the exact path on a bounded domain") {
+    val rows = for (k <- Seq("x", "y"); i <- 1 to 400)
+      yield (k, (i % 40).toDouble)
+    val df = rows.toDF("k", "v")
+    val exact = Splits.lowerQuantileFromCounts(
+        df.groupBy(col("k"), col("v").as("_v"))
+          .agg(count(lit(1)).as("_c")), Seq("k"), 1, 2)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val approx = Splits.approxQuantileByKey(df, Seq("k"), col("v"), 1, 2)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    exact.foreach { case (k, q) =>
+      assert(math.abs(approx(k) - q) <= 1.0,
+        s"approx median for $k drifted: exact=$q approx=${approx(k)}")
+    }
+  }
 }

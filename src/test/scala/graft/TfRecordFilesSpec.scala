@@ -150,4 +150,21 @@ class TfRecordFilesSpec extends SparkSpec {
     assert(ex.getMessage.contains("crc") ||
       Option(ex.getCause).exists(_.getMessage.contains("crc")))
   }
+
+  test("tfrecord protobuf skip: a truncated fixed64/fixed32 unknown " +
+    "field fails loudly instead of running past the message end") {
+    import graft.sources.TfRecordFiles
+    // tag for field 99, wire type 1 (fixed64) = (99<<3)|1 = 793 →
+    // varint [0x99, 0x06], then only 3 payload bytes (needs 8)
+    val truncated64 = Array[Byte](0x99.toByte, 0x06, 1, 2, 3)
+    val e1 = intercept[IllegalArgumentException](
+      TfRecordFiles.parseExample(truncated64))
+    assert(e1.getMessage.contains("fixed64"))
+    // tag for field 99, wire type 5 (fixed32) = (99<<3)|5 = 797 →
+    // varint [0x9d, 0x06], then only 1 payload byte (needs 4)
+    val truncated32 = Array[Byte](0x9d.toByte, 0x06, 1)
+    val e2 = intercept[IllegalArgumentException](
+      TfRecordFiles.parseExample(truncated32))
+    assert(e2.getMessage.contains("fixed32"))
+  }
 }
